@@ -2153,98 +2153,87 @@ object Dedup {
     // mutually independent — (a) the quality corpus scan (needs only
     // the documents table, not the dedup chain), (b) the CC labeling
     // and (c) the authority power iteration (both ride the SAME
-    // checkpointed pair graph but never each other). A 3-thread pool
-    // submits them concurrently so each job's straggler tail is
-    // back-filled by the others' tasks; FIFO scheduling keeps the
-    // first-submitted job's resources first, which is exactly the
-    // back-fill shape the guide describes. Results are awaited before
-    // the (sequential) final join; any failure rethrows via
-    // Await.result. Job descriptions are thread-local, so the UI
-    // labels each overlapped job correctly.
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-    implicit val ec: ExecutionContext =
-      ExecutionContext.fromExecutorService(pool)
-    try {
-    val docs = Tables.documents(s, d)
-    // quality is a full corpus TEXT scan at 100 TB — the single most
-    // overlappable cost: fork it first, checkpoint so the work really
-    // happens inside the future (a lazy frame would defer it back
-    // into the sequential final join)
-    val qualityF = Future {
-      s.sparkContext.setJobDescription("dd_pipeline: quality scan (overlapped)")
-      TextAnalysis.txQuality(s, d)
-        .select(col("doc_id"), col("quality_score"))
-        .localCheckpoint()
-    }
-    // the digest projection is materialized NARROW (doc_id,
-    // text_hash): it feeds both the keeper aggregate and the fan-back
-    // join, and without it each consumer re-ran the corpus scan + the
-    // normalize-regex + md5 (round 17 — at 100 TB that is a second
-    // full pass over the text for zero new information).
-    // localCheckpoint, not persist (round 18): the pipeline's many
-    // driver actions each re-planned the cached frame as an
-    // InMemoryTableScan + AQE pass — as a checkpoint they read a bare
-    // ExistingRDD (hashed+keepers A/B: warm min 1.82 → 1.38 s).
-    // Blocks are ContextCleaner-freed when the result goes
-    // unreachable; 40 B/row, the same residency bound the old
-    // cache paid when hit.
-    val hashed = docs.select(col("doc_id"),
-      md5(lower(regexp_replace(trim(col("text")), "\\s+", " ")))
-        .as("text_hash"))
-      .localCheckpoint()
-    // exact stage: one partial-aggregating shuffle on the digest; the
-    // keeper (min doc_id per digest) is the survivor set.
-    // Materialized: read by the fan-back join AND as the root of the
-    // survivor chain (pairs semi-joins, rank nodes, CC labels).
-    val keepers = hashed.groupBy(col("text_hash"))
-      .agg(min(col("doc_id")).as("keeper_id"))
-      .localCheckpoint()
-    val withKeeper = hashed
-      .join(keepers, "text_hash")
-      .select(col("doc_id"), col("keeper_id"))
-    val survivors = keepers.select(col("keeper_id").as("doc_id"))
-    // the pair graph — computed ONCE and materialized HERE, because two
-    // iterative stages ride it: connected components (cluster labels)
-    // and the authority power iteration. The canonical and split
-    // stages consume the resulting labels, not the graph.
-    // Round 13: signatures are PER-DOC (no cross-doc dependence), so
-    // pairs-among-survivors == the store-backed full-corpus pair
-    // stream restricted to survivor endpoints — two semi-joins on the
-    // emitted pairs instead of a survivor-subset signature recompute
-    // + band self-join. Reads the persisted band store + the
-    // first-band-wins join (minhashPairs), so the pipeline inherits
-    // both amortizations; the semi-joins shuffle the PAIR graph
-    // (narrow rows), never the banded collision stream. Identical
-    // pair set (restriction commutes with emission — spec-pinned).
-    val pairs = {
-      val sa = survivors.select(col("doc_id").as("doc_a"))
-      val sb = survivors.select(col("doc_id").as("doc_b"))
-      minhashPairs(s, d)
-        .join(sa, Seq("doc_a"), "left_semi")
-        .join(sb, Seq("doc_b"), "left_semi")
-        .select(col("doc_a"), col("doc_b"))
-        .localCheckpoint()
-    }
-    // CC labeling and the authority power iteration are independent
-    // consumers of the checkpointed graph — overlapped (their heavy
-    // work — routing counts, collects, per-round jobs — runs inside
-    // the futures; the returned frames are cheap reads over
-    // checkpoints/broadcasts)
-    val labelsF = Future {
-      s.sparkContext.setJobDescription("dd_pipeline: CC labels (overlapped)")
-      connectedComponents(pairs, materialized = true)
-        .select(col("node").as("doc_id"), col("label").as("cluster_id"))
-    }
-    val rankF = Future {
-      s.sparkContext.setJobDescription("dd_pipeline: authority rank (overlapped)")
-      graphRankScores(survivors, pairs)
-        .select(col("doc_id"), col("score_e9").as("authority_e9"))
-    }
-    val labels = Await.result(labelsF, Duration.Inf)
-    val rank = Await.result(rankF, Duration.Inf)
-    val quality = Await.result(qualityF, Duration.Inf)
+    // checkpointed pair graph but never each other). Running them
+    // concurrently lets each job's straggler tail be back-filled by
+    // the others' tasks (the back-fill shape the guide describes).
+    val Seq(Seq(quality), Seq(withKeeper, survivors, labels, rank)) =
+      graft.Stages.all(s)(
+        // quality is a full corpus TEXT scan at 100 TB — the single most
+        // overlappable cost: submitted first, checkpointed so the work
+        // really happens inside the stage (a lazy frame would defer it
+        // back into the sequential final join)
+        "dd_pipeline: quality scan (overlapped)" -> { () =>
+          Seq(TextAnalysis.txQuality(s, d)
+            .select(col("doc_id"), col("quality_score"))
+            .localCheckpoint())
+        },
+        "dd_pipeline: pair graph (overlapped)" -> { () =>
+          val docs = Tables.documents(s, d)
+          // the digest projection is materialized NARROW (doc_id,
+          // text_hash): it feeds both the keeper aggregate and the fan-back
+          // join, and without it each consumer re-ran the corpus scan + the
+          // normalize-regex + md5 (round 17 — at 100 TB that is a second
+          // full pass over the text for zero new information).
+          // localCheckpoint, not persist (round 18): the pipeline's many
+          // driver actions each re-planned the cached frame as an
+          // InMemoryTableScan + AQE pass — as a checkpoint they read a bare
+          // ExistingRDD (hashed+keepers A/B: warm min 1.82 → 1.38 s).
+          // Blocks are ContextCleaner-freed when the result goes
+          // unreachable; 40 B/row, the same residency bound the old
+          // cache paid when hit.
+          val hashed = docs.select(col("doc_id"),
+            md5(lower(regexp_replace(trim(col("text")), "\\s+", " ")))
+              .as("text_hash"))
+            .localCheckpoint()
+          // exact stage: one partial-aggregating shuffle on the digest; the
+          // keeper (min doc_id per digest) is the survivor set.
+          // Materialized: read by the fan-back join AND as the root of the
+          // survivor chain (pairs semi-joins, rank nodes, CC labels).
+          val keepers = hashed.groupBy(col("text_hash"))
+            .agg(min(col("doc_id")).as("keeper_id"))
+            .localCheckpoint()
+          val withKeeper = hashed
+            .join(keepers, "text_hash")
+            .select(col("doc_id"), col("keeper_id"))
+          val survivors = keepers.select(col("keeper_id").as("doc_id"))
+          // the pair graph — computed ONCE and materialized HERE, because two
+          // iterative stages ride it: connected components (cluster labels)
+          // and the authority power iteration. The canonical and split
+          // stages consume the resulting labels, not the graph.
+          // Round 13: signatures are PER-DOC (no cross-doc dependence), so
+          // pairs-among-survivors == the store-backed full-corpus pair
+          // stream restricted to survivor endpoints — two semi-joins on the
+          // emitted pairs instead of a survivor-subset signature recompute
+          // + band self-join. Reads the persisted band store + the
+          // first-band-wins join (minhashPairs), so the pipeline inherits
+          // both amortizations; the semi-joins shuffle the PAIR graph
+          // (narrow rows), never the banded collision stream. Identical
+          // pair set (restriction commutes with emission — spec-pinned).
+          val pairs = {
+            val sa = survivors.select(col("doc_id").as("doc_a"))
+            val sb = survivors.select(col("doc_id").as("doc_b"))
+            minhashPairs(s, d)
+              .join(sa, Seq("doc_a"), "left_semi")
+              .join(sb, Seq("doc_b"), "left_semi")
+              .select(col("doc_a"), col("doc_b"))
+              .localCheckpoint()
+          }
+          // CC labeling and the authority power iteration are independent
+          // consumers of the checkpointed graph — overlapped (their heavy
+          // work — routing counts, collects, per-round jobs — runs inside
+          // the stages; the returned frames are cheap reads over
+          // checkpoints/broadcasts)
+          val Seq(labels, rank) = graft.Stages.all(s)(
+            "dd_pipeline: CC labels (overlapped)" -> { () =>
+              connectedComponents(pairs, materialized = true)
+                .select(col("node").as("doc_id"), col("label").as("cluster_id"))
+            },
+            "dd_pipeline: authority rank (overlapped)" -> { () =>
+              graphRankScores(survivors, pairs)
+                .select(col("doc_id"), col("score_e9").as("authority_e9"))
+            })
+          Seq(withKeeper, survivors, labels, rank)
+        })
     val w = Window.partitionBy(col("cluster_id"))
       .orderBy(col("quality_score").desc, col("doc_id"))
     // canonical + split computed on the SURVIVOR level (one row per
@@ -2270,7 +2259,6 @@ object Dedup {
         (col("is_can") && col("doc_id") === col("keeper_id")).as("is_canonical"),
         col("authority_e9"), col("split"))
       .orderBy(col("doc_id"))
-    } finally pool.shutdown() // futures are awaited above; idle threads die
   }
 
   /** The dd_graph_rank oracle: the same five integer power iterations,
@@ -2278,34 +2266,6 @@ object Dedup {
     * round's dangling scalar, integer contributions, and inflow join
     * re-derived independently in SQL.
     */
-  /** The unrolled 5-iteration power-iteration CTE chain, parameterized
-    * over the deg/count/edge table names and the per-iteration CTE
-    * naming — shared by the dd_graph_rank oracle (whole-corpus node
-    * set) and the dd_pipeline oracle (survivor node set on the shared
-    * pair graph), so an iteration-formula fix reaches both.
-    */
-  /** The unrolled-iteration CTE chain shared by every oracle that
-    * re-derives the integer PageRank recurrence in SQL (dd_graph_rank,
-    * dd_pipeline, and tx_textrank over the word graph). */
-  private[operators] def rankIterCtes(deg: String, nn: String, edges: String,
-      name: Int => String): String =
-    (1 to 5).map { k =>
-      val p = name(k - 1)
-      s"""${name(k)} AS (
-         |  SELECT d.doc_id, d.deg,
-         |    CAST(150000000 // $nn.n
-         |      + (85 * (coalesce(inf.inflow, 0) + dang.dang // $nn.n)) // 100 AS BIGINT) AS score_e9
-         |  FROM $deg d
-         |  CROSS JOIN $nn
-         |  CROSS JOIN (
-         |    SELECT CAST(coalesce(sum(score_e9), 0) AS BIGINT) AS dang
-         |    FROM $p WHERE deg = 0) dang
-         |  LEFT JOIN (
-         |    SELECT e.doc_b AS doc_id, CAST(sum(p.score_e9 // p.deg) AS BIGINT) AS inflow
-         |    FROM $p p JOIN $edges e ON p.doc_id = e.doc_a
-         |    WHERE p.deg > 0 GROUP BY 1) inf USING (doc_id))""".stripMargin
-    }.mkString(",\n", ",\n", "")
-
   private val graphRankOracle: String = {
     val base =
       """WITH pairs AS (
@@ -2321,7 +2281,7 @@ object Dedup {
         |s0 AS (
         |  SELECT doc_id, deg, CAST(1000000000 // nn.n AS BIGINT) AS score_e9
         |  FROM deg CROSS JOIN nn)""".stripMargin
-    base + rankIterCtes("deg", "nn", "edges", k => s"s$k") +
+    base + OracleSql.rankIterCtes("deg", "nn", "edges", k => s"s$k") +
       "\nSELECT doc_id, deg, score_e9 FROM s5 ORDER BY doc_id"
   }
 
@@ -2381,7 +2341,7 @@ object Dedup {
     "dd_cdfs" -> ddArticulationContracted)
 
   /** dd_exact is deterministic SQL. dd_embed_cosine's hyperplanes are
-    * fixed-seed float literals (Similarity.bucketSql inlines them), so
+    * fixed-seed float literals (OracleSql.bucketSql inlines them), so
     * it carries a full oracle too. The xxhash64-seeded operators carry
     * SPLIT ORACLES (see [[auxDumps]]): DuckDB re-runs the banding /
     * join / threshold / clustering logic over the dumped signature
@@ -2817,7 +2777,7 @@ object Dedup {
         |r0 AS (
         |  SELECT doc_id, deg, CAST(1000000000 // snn.n AS BIGINT) AS score_e9
         |  FROM sdeg CROSS JOIN snn)""".stripMargin +
-      rankIterCtes("sdeg", "snn", "sedges", k => s"r$k") + ",\n" +
+      OracleSql.rankIterCtes("sdeg", "snn", "sedges", k => s"r$k") + ",\n" +
       """quality AS (
         |  SELECT doc_id,
         |    floor(least(CAST(len(string_split(text, ' ')) AS DOUBLE) / 100.0, 1.0)
@@ -2846,10 +2806,10 @@ object Dedup {
         |  JOIN r5 r ON w.keeper_id = r.doc_id) t
         |ORDER BY doc_id""".stripMargin),
     // the shared three-level assignment chain (one SQL copy in
-    // Similarity.threeLevelCtes — the kernel-sharing rule applied to
+    // OracleSql.threeLevelCtes — the kernel-sharing rule applied to
     // the oracles too), parameterized by semanticK's formula
     "dd_semantic" ->
-      s"""WITH ${Similarity.threeLevelCtes(
+      s"""WITH ${OracleSql.threeLevelCtes(
              "greatest(16, CAST(ceil(count(*) / 512.0) AS BIGINT))")},
         |dropped AS (
         |  SELECT DISTINCT a.vec_id
@@ -3004,7 +2964,7 @@ object Dedup {
     "dd_embed_cosine" ->
       s"""WITH b AS (
          | SELECT vec_id, embedding,
-         |  ${Similarity.adaptiveBucketSql("embedding", "SELECT count(*) FROM embeddings")} AS bucket
+         |  ${OracleSql.adaptiveBucketSql("embedding", "SELECT count(*) FROM embeddings")} AS bucket
          | FROM embeddings)
          |SELECT vec_a, vec_b, cosine FROM (
          | SELECT a.vec_id AS vec_a, b2.vec_id AS vec_b,

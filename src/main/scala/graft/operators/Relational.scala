@@ -105,7 +105,10 @@ object Relational {
   }
 
   /** TPC-H Q6 shape: tight range scan + product sum; fully pushes to
-    * the parquet scan, aggregates to one row.
+    * the parquet scan, aggregates to one row. The sum is exact DECIMAL
+    * (every price and discount is a 2-dp value): a double sum depends
+    * on row order, and this one lands on a .xx5 boundary, so its 2-dp
+    * rounding flipped between row orders on both engines.
     */
   val q06RevenueFilter: Q = (s, d) =>
     Tables.lineitem(s, d)
@@ -113,7 +116,8 @@ object Relational {
         col("l_shipdate") < lit("1997-01-01").cast("date") &&
         col("l_discount") > 0.03 && col("l_discount") < 0.08 &&
         col("l_quantity") < 24)
-      .agg(round(sum(col("l_extendedprice") * col("l_discount")), 2).as("revenue"))
+      .agg(round(sum(col("l_extendedprice").cast("decimal(18,2)") *
+        col("l_discount").cast("decimal(4,2)")), 2).cast("double").as("revenue"))
 
   /** Global top-k: Spark runs this as a TakeOrderedAndProject — no full
     * sort at scale.
@@ -1504,17 +1508,11 @@ object Relational {
     * size-routing precedent). (b) The exact refine was a
     * single-partition RANGE window over the SURVIVORS — bounded only
     * by data shape (the cheapest bucket survives whole, so one task
-    * held O(n/64) rows at scale). Now it is the textbook two-pass
-    * distributed prefix scan: survivors are range-partitioned by
-    * cost_c (equal costs co-partitioned by the range partitioner, so
-    * cross-partition peers are always STRICTLY cheaper), each
-    * partition's max qty is collected (≤P rows), the driver forms
-    * exclusive per-partition prefix maxima, and the exact
-    * strictly-cheaper running max is greatest(per-partition RANGE
-    * window, broadcast prefix) — a partitionBy(__pid) window, never a
-    * single task. Oracle unchanged; SweepSkylinePropertySpec pins the
-    * kernel against brute force on ties / all-equal / single-point
-    * shapes.
+    * held O(n/64) rows at scale). Now it is the two-pass distributed
+    * prefix scan of [[graft.plans.PrefixScan]] keyed by cost_c, whose
+    * exclusive max is exactly the strictly-cheaper running max. Oracle
+    * unchanged; SweepSkylinePropertySpec pins the kernel against brute
+    * force on ties / all-equal / single-point shapes.
     */
   /** The broadcast bucket-cummax PREFILTER leg of [[skyline]], split
     * out so PlanHealthSpec can pin its plan (the refine checkpoint
@@ -1537,13 +1535,8 @@ object Relational {
     // ≤64-row histogram by construction — driver-side exclusive cummax
     val hist = bucketed.groupBy(col("bkt")).agg(max(col("qty_l")).as("bqty"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
-    val prevB = hist.scanLeft((Long.MinValue, Option.empty[Long])) {
-      case ((_, run), (bkt, bqty)) =>
-        (bkt, Some(run.fold(bqty)(math.max(_, bqty))))
-    }.sliding(2).collect { case Array((_, run), (bkt, _)) =>
-      (bkt, run.map(Long.box).orNull)
-    }.toSeq
-    val cum = broadcast(prevB.toDF("bkt", "prev_bqty"))
+    val cum = broadcast(graft.plans.PrefixScan.exclusiveMax(hist.toSeq)
+      .toDF("bkt", "prev_bqty"))
     Some(bucketed
       .join(cum, Seq("bkt"))
       .filter(col("prev_bqty").isNull || col("qty_l") >= col("prev_bqty"))
@@ -1595,25 +1588,8 @@ object Relational {
       return out.result().toDF("id", "cost_c", "qty_l")
         .orderBy(col("cost_c"), col("id"))
     }
-    // exact refine, two-pass: range partition on cost_c, per-partition
-    // maxima to the driver, exclusive prefix back as a broadcast
-    val sp = survivors.repartitionByRange(col("cost_c"))
-      .withColumn("__pid", spark_partition_id())
-      .localCheckpoint()
-    val pidMax = sp.groupBy(col("__pid")).agg(max(col("qty_l")).as("pmax"))
-      .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-    val prefix = pidMax.scanLeft((Int.MinValue, Option.empty[Long])) {
-      case ((_, run), (pid, pmax)) =>
-        (pid, Some(run.fold(pmax)(math.max(_, pmax))))
-    }.sliding(2).collect { case Array((_, run), (pid, _)) =>
-      (pid, run.map(Long.box).orNull)
-    }.toSeq
-    val prefixDf = broadcast(prefix.toDF("__pid", "prefix_max"))
-    val wLocal = Window.partitionBy(col("__pid")).orderBy(col("cost_c"))
-      .rangeBetween(Window.unboundedPreceding, -1)
-    sp.join(prefixDf, Seq("__pid"))
-      .withColumn("prev_max",
-        greatest(max(col("qty_l")).over(wLocal), col("prefix_max")))
+    // exact refine: the distributed two-pass exclusive prefix max
+    graft.plans.PrefixScan.exclusiveMaxByKey(survivors, "cost_c", "qty_l")
       .filter(col("prev_max").isNull || col("prev_max") <= col("qty_l"))
       .select(col("id"), col("cost_c"), col("qty_l"))
       .orderBy(col("cost_c"), col("id"))
@@ -2663,7 +2639,8 @@ object Relational {
         |  AND o_orderdate >= DATE '1996-01-01' AND o_orderdate < DATE '1997-01-01'
         |GROUP BY n_name ORDER BY revenue DESC, n_name""".stripMargin,
     "q06_revenue_filter" ->
-      """SELECT round(sum(l_extendedprice*l_discount),2) AS revenue
+      """SELECT CAST(round(sum(CAST(l_extendedprice AS DECIMAL(18,2)) *
+        |  CAST(l_discount AS DECIMAL(4,2))), 2) AS DOUBLE) AS revenue
         |FROM lineitem
         |WHERE l_shipdate >= DATE '1996-01-01' AND l_shipdate < DATE '1997-01-01'
         |  AND l_discount > 0.03 AND l_discount < 0.08 AND l_quantity < 24""".stripMargin,

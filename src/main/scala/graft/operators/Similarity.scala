@@ -22,19 +22,7 @@ object Similarity {
 
   private def q4(c: Column): Column = floor(c * 10000 + 0.5) / lit(10000.0)
 
-  /** Deterministic random hyperplanes (fixed seed — signatures must be
-    * reproducible across runs and engines). `nPlanes` is the corpus-
-    * size lever: buckets = 2^planes, so expected occupancy = n/2^p —
-    * raise p as the corpus grows to keep within-bucket candidate
-    * generation (quadratic in occupancy) bounded. 6 planes fit the
-    * harness corpus; a 10⁹-doc corpus wants ~20.
-    */
-  private[graft] def makePlanes(nPlanes: Int, dim: Int = 64): Seq[Seq[Float]] = {
-    val rng = new scala.util.Random(42)
-    Seq.fill(nPlanes)(Seq.fill(dim)(rng.nextGaussian().toFloat))
-  }
-
-  private[graft] val planes: Seq[Seq[Float]] = makePlanes(6)
+  private[graft] val planes: Seq[Seq[Float]] = OracleSql.makePlanes(6)
 
   /** The corpus-size lever, wired: smallest p ≥ 6 with 32·2^p ≥ n, so
     * expected bucket occupancy stays ≤ ~32 as the corpus grows (the
@@ -50,43 +38,13 @@ object Similarity {
     p
   }
 
-  private[graft] def planesFor(n: Long): Seq[Seq[Float]] = makePlanes(pFor(n))
+  private[graft] def planesFor(n: Long): Seq[Seq[Float]] = OracleSql.makePlanes(pFor(n))
 
   /** Sign-bit bucket id from the hyperplanes (2^planes buckets). */
   private[graft] def bucketOf(emb: Column, ps: Seq[Seq[Float]] = planes): Column =
     ps.zipWithIndex.foldLeft(lit(0)) { case (acc, (p, i)) =>
       acc + when(dotProduct(emb, typedlit(p)) > 0d, lit(1 << i)).otherwise(lit(0))
     }
-
-  /** The seed-42 hyperplanes as a DuckDB DOUBLE[] literal, and the
-    * bucket id as DuckDB SQL — the planes are plain float constants, so
-    * the "approximate" LSH operators are in fact fully deterministic and
-    * can carry a hash-checked oracle. `f.toDouble.toString` is the
-    * shortest decimal that round-trips the exact double value of each
-    * float, and float→double widening is exact, so both engines see
-    * bit-identical plane values.
-    */
-  private def planeSqlLit(p: Seq[Float]): String =
-    p.map(_.toDouble.toString).mkString("[", ",", "]::DOUBLE[]")
-
-  /** DuckDB twin of [[bucketOf]] over column `c` (same sign-sum form). */
-  private[operators] def bucketSql(c: String, ps: Seq[Seq[Float]] = planes): String =
-    ps.zipWithIndex.map { case (p, i) =>
-      s"(CASE WHEN list_dot_product(CAST($c AS DOUBLE[]), ${planeSqlLit(p)}) > 0 THEN ${1 << i} ELSE 0 END)"
-    }.mkString("(", " + ", ")")
-
-  /** Corpus-size-adaptive DuckDB twin of `bucketOf(e, planesFor(n))`:
-    * one CASE branch per plane count the oracle may need (p = 6..9
-    * covers corpora to 16384 vectors; the operator itself is unbounded
-    * — a bigger corpus needs the next branch added here, and the
-    * verify gate fails loudly rather than silently diverging).
-    */
-  private[operators] def adaptiveBucketSql(c: String, countSql: String): String = {
-    val branches = (6 to 9).map { p =>
-      s"WHEN ($countSql) <= ${32L << p} THEN ${bucketSql(c, makePlanes(p))}"
-    }
-    branches.mkString("(CASE ", " ", " END)")
-  }
 
   /** NOTE on the fixed `vec_id < 8` / `< 16` ANCHOR slices used by the
     * fixed-k ann_* family (here, annLshTopk, annIvfTopk,
@@ -538,7 +496,7 @@ object Similarity {
     * (the kc/km/k lowest ids present — robust to sparse id spaces,
     * see the selection comment below), so DuckDB rebuilds every level
     * from the parquet and the whole chain carries a full oracle
-    * ([[threeLevelCtes]] is the one SQL copy).
+    * ([[OracleSql.threeLevelCtes]] is the one SQL copy).
     * Only the kc-row coarse table is driver-collected; mid (kc² rows)
     * and fine (k rows) stay DataFrames end to end. `k` is a parameter
     * (annK for the ANN family, Dedup.semanticK for dd_semantic) so
@@ -777,61 +735,7 @@ object Similarity {
       .select(col("query_id"), col("q_emb"), col("cent_id"))
   }
 
-  /** THE ONE SQL COPY of the three-level assignment chain — every
-    * adaptive oracle (ann_incremental_adaptive, ann_range_adaptive,
-    * the adaptive walk prelude, dd_semantic) composes these CTEs, so
-    * an assignment change reaches all of them at once, mirroring how
-    * [[threeLevelParts]] is the one Scala copy. `kSql` is the
-    * aggregate expression computing k over the embeddings table
-    * (annK's or semanticK's formula). Emits CTEs: params(k, kc, km),
-    * rnks (id → rank, the RANK-prefix centroid selection mirroring
-    * the Scala kernel's cutoffs), coarse, cellc (all vectors →
-    * coarse cell), mid (⊂ cellc), cellm (all vectors → mid cell),
-    * fine (⊂ cellm), asg (all vectors → fine cent_id). kc is the
-    * exact integer cube-root ceiling (an integer range scan —
-    * pow/cbrt rounding could desync the engines at an exact-cube k).
-    */
-  private[graft] def threeLevelCtes(kSql: String): String =
-    s"""params AS (
-      |  SELECT k, kc, kc * kc AS km FROM (
-      |    SELECT k,
-      |      (SELECT min(i) FROM range(1, 2000) t(i) WHERE i*i*i >= k) AS kc
-      |    FROM (SELECT $kSql AS k FROM embeddings) b) t),
-      |rnks AS (
-      |  SELECT vec_id, row_number() OVER (ORDER BY vec_id) AS rnk
-      |  FROM embeddings),
-      |coarse AS (
-      |  SELECT e.vec_id AS coarse_id, CAST(e.embedding AS DOUBLE[]) AS co_emb
-      |  FROM embeddings e JOIN rnks USING (vec_id)
-      |  WHERE rnk <= (SELECT kc FROM params)),
-      |cellc AS (
-      |  SELECT vec_id, emb, coarse_id FROM (
-      |    SELECT e.vec_id, CAST(e.embedding AS DOUBLE[]) AS emb, c.coarse_id,
-      |      row_number() OVER (PARTITION BY e.vec_id
-      |        ORDER BY list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), c.co_emb) DESC, c.coarse_id) AS rn
-      |    FROM embeddings e CROSS JOIN coarse c) t WHERE rn = 1),
-      |mid AS (
-      |  SELECT vec_id AS mid_id, emb AS m_emb, coarse_id FROM cellc
-      |  JOIN rnks USING (vec_id)
-      |  WHERE rnk <= (SELECT km FROM params)),
-      |cellm AS (
-      |  SELECT vec_id, emb, mid_id FROM (
-      |    SELECT l.vec_id, l.emb, m.mid_id,
-      |      row_number() OVER (PARTITION BY l.vec_id
-      |        ORDER BY list_cosine_similarity(l.emb, m.m_emb) DESC, m.mid_id) AS rn
-      |    FROM cellc l JOIN mid m ON l.coarse_id = m.coarse_id) t WHERE rn = 1),
-      |fine AS (
-      |  SELECT vec_id AS cent_id, emb AS c_emb, mid_id FROM cellm
-      |  JOIN rnks USING (vec_id)
-      |  WHERE rnk <= (SELECT k FROM params)),
-      |asg AS (
-      |  SELECT vec_id, emb, cent_id FROM (
-      |    SELECT l.vec_id, l.emb, f.cent_id,
-      |      row_number() OVER (PARTITION BY l.vec_id
-      |        ORDER BY list_cosine_similarity(l.emb, f.c_emb) DESC, f.cent_id) AS rn
-      |    FROM cellm l JOIN fine f ON l.mid_id = f.mid_id) t WHERE rn = 1)""".stripMargin
-
-  /** annK's k as oracle SQL — pairs with [[threeLevelCtes]]. */
+  /** annK's k as oracle SQL — pairs with [[OracleSql.threeLevelCtes]]. */
   private[graft] val annKSql: String =
     "greatest(16, CAST(ceil(count(*) / 64.0) AS BIGINT))"
 
@@ -1557,7 +1461,7 @@ object Similarity {
     "ann_graph_walk_adaptive" -> walkCertSql(
       s"""emb AS (
         |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-        |${threeLevelCtes(annKSql)},
+        |${OracleSql.threeLevelCtes(annKSql)},
         |g AS (
         |  SELECT src, dst FROM (
         |    SELECT a.vec_id AS src, b.vec_id AS dst,
@@ -1578,7 +1482,7 @@ object Similarity {
         |  GROUP BY qq.query_id)""".stripMargin,
       "__OUT__/ann_graph_walk_adaptive/*.parquet"),
     "ann_rrf_fusion" ->
-      s"""WITH ${TextAnalysis.bm25ScoredCte},
+      s"""WITH ${OracleSql.bm25ScoredCte},
         |lex AS (
         |  SELECT query_id, doc_id, rank AS r_lex FROM (
         |    SELECT query_id, doc_id, row_number() OVER (PARTITION BY query_id
@@ -1726,7 +1630,7 @@ object Similarity {
         |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
     "ann_lsh_topk" ->
       s"""WITH b AS (
-         | SELECT vec_id, embedding, ${bucketSql("embedding")} AS bucket
+         | SELECT vec_id, embedding, ${OracleSql.bucketSql("embedding", planes)} AS bucket
          | FROM embeddings)
          |SELECT query_id, rank, neighbor_id, sim, bucket FROM (
          | SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
@@ -1785,7 +1689,7 @@ object Similarity {
         |  FROM stored a JOIN probes p ON a.cent_id = p.cent_id) t
         |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
     "ann_range_adaptive" ->
-      s"""WITH ${threeLevelCtes(annKSql)},
+      s"""WITH ${OracleSql.threeLevelCtes(annKSql)},
         |probes AS (
         |  SELECT query_id, q_emb, cent_id FROM (
         |    SELECT l.vec_id AS query_id, l.emb AS q_emb, f.cent_id,
@@ -1800,7 +1704,7 @@ object Similarity {
         |  WHERE a.vec_id <> p.query_id) t
         |WHERE sim >= 0.25 ORDER BY query_id, neighbor_id""".stripMargin,
     "ann_incremental_adaptive" ->
-      s"""WITH ${threeLevelCtes(annKSql)},
+      s"""WITH ${OracleSql.threeLevelCtes(annKSql)},
         |stored AS (SELECT vec_id, emb, cent_id FROM asg WHERE vec_id % 5 <> 0),
         |probes AS (
         |  SELECT query_id, q_emb, cent_id FROM (

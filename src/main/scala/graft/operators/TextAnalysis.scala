@@ -1294,7 +1294,7 @@ object TextAnalysis {
     * labeling diverging). Plan-pinned window-free in PlanHealthSpec.
     * Top-30 by (score, word); the oracle re-derives the whole graph
     * and unrolls the five iterations in SQL (the shared
-    * [[Dedup.rankIterCtes]] chain).
+    * [[OracleSql.rankIterCtes]] chain).
     */
   val txTextrank: Q = (s, d) => {
     val docs = Tables.documents(s, d)
@@ -1370,50 +1370,10 @@ object TextAnalysis {
     "tx_tokens" -> txTokens,
     "tx_fingerprint" -> txFingerprint)
 
-  /** The BM25 derivation (query terms → per-(query, doc) integer
-    * score_e6) as a DuckDB CTE chain — ONE definition shared by the
-    * tx_bm25 oracle and ann_rrf_fusion's lexical-leg oracle, so a
-    * scoring change (constants, rounding) can never silently desync
-    * the fused operator's oracle. Terminates with the `scored` CTE;
-    * interpolate after WITH and add the ranking on top.
-    */
-  private[operators] val bm25ScoredCte: String =
-    """terms AS (
-      |  SELECT * FROM (VALUES
-      |    (CAST(1 AS BIGINT), 'spark'), (CAST(1 AS BIGINT), 'join'),
-      |    (CAST(2 AS BIGINT), 'window'), (CAST(2 AS BIGINT), 'agg'),
-      |    (CAST(3 AS BIGINT), 'customer'), (CAST(3 AS BIGINT), 'order'),
-      |    (CAST(3 AS BIGINT), 'query'),
-      |    (CAST(4 AS BIGINT), 'hash'), (CAST(4 AS BIGINT), 'table')
-      |  ) AS t(query_id, term)),
-      |docs AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-      |dls AS (SELECT doc_id, CAST(len(w) AS BIGINT) AS dl FROM docs),
-      |stats AS (
-      |  SELECT CAST(count(*) AS BIGINT) AS n_docs,
-      |         CAST(sum(dl) AS DOUBLE) / count(*) AS avgdl FROM dls),
-      |tf AS (
-      |  SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
-      |  FROM (SELECT doc_id, unnest(w) AS term FROM docs) k
-      |  WHERE term IN (SELECT DISTINCT term FROM terms)
-      |  GROUP BY 1, 2),
-      |dfs AS (SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY term),
-      |scored AS (
-      |  SELECT t.query_id, f.doc_id,
-      |    CAST(sum(CAST(floor((s.n_docs * 1000000 // d.df) *
-      |      (f.tf * CAST(2.2 AS DOUBLE) /
-      |       (f.tf + CAST(1.2 AS DOUBLE) * (0.25 + 0.75 * l.dl / s.avgdl)))
-      |      + 0.5) AS BIGINT)) AS BIGINT) AS score_e6
-      |  FROM tf f
-      |  JOIN dfs d ON f.term = d.term
-      |  JOIN terms t ON f.term = t.term
-      |  JOIN dls l ON f.doc_id = l.doc_id
-      |  CROSS JOIN stats s
-      |  GROUP BY 1, 2)""".stripMargin
-
   /** The tx_textrank oracle: the word graph re-derived from scratch in
     * SQL (vocab row-numbering, adjacency pairs, mirrored edges) with
     * the five rank iterations unrolled via the shared
-    * [[Dedup.rankIterCtes]] chain — the same independence contract as
+    * [[OracleSql.rankIterCtes]] chain — the same independence contract as
     * the dd_graph_rank oracle, on a different domain.
     */
   private val textrankOracle: String = {
@@ -1443,7 +1403,7 @@ object TextAnalysis {
         |s0 AS (
         |  SELECT doc_id, deg, CAST(1000000000 // nn.n AS BIGINT) AS score_e9
         |  FROM deg CROSS JOIN nn)""".stripMargin
-    base + Dedup.rankIterCtes("deg", "nn", "edges", k => s"s$k") +
+    base + OracleSql.rankIterCtes("deg", "nn", "edges", k => s"s$k") +
       "\nSELECT v.w AS word, s5.deg, s5.score_e9 FROM s5 JOIN vocab v USING (doc_id)" +
       "\nORDER BY s5.score_e9 DESC, word LIMIT 30"
   }
@@ -1670,7 +1630,7 @@ object TextAnalysis {
         | FROM documents) t
         |ORDER BY doc_id""".stripMargin,
     "tx_bm25" ->
-      s"""WITH $bm25ScoredCte
+      s"""WITH ${OracleSql.bm25ScoredCte}
         |SELECT query_id, rank, doc_id, score_e6 FROM (
         |  SELECT query_id, doc_id, score_e6,
         |    row_number() OVER (PARTITION BY query_id

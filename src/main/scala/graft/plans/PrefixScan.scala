@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -20,11 +20,17 @@ import org.apache.spark.sql.functions._
   *     task; the RANGE frame excludes equal keys exactly like the
   *     single-partition original.
   *
-  * Same shape as q52_skyline's distributed refine (kept inline there —
-  * its driver route fuses the skyline filter); first shared consumer
-  * is st_lateness_audit's watermark table.
+  * Consumers: q52_skyline's distributed refine and
+  * st_lateness_audit's watermark table.
   */
 object PrefixScan {
+  /** The driver step: for key-sorted `(key, value)` pairs, each key
+    * with the max value over all earlier keys (null for the first).
+    */
+  def exclusiveMax[K](sorted: Seq[(K, Long)]): Seq[(K, java.lang.Long)] =
+    sorted.scanLeft(Option.empty[Long]) { case (run, (_, v)) => Some(run.fold(v)(math.max(_, v))) }
+      .zip(sorted).map { case (run, (k, _)) => (k, run.map(Long.box).orNull) }
+
   /** `df` plus a `prev_max` LongType column. `valCol` must be a Long
     * column; `df` is materialized internally (one localCheckpoint).
     */
@@ -36,13 +42,7 @@ object PrefixScan {
       .localCheckpoint()
     val pidMax = sp.groupBy(col("__pid")).agg(max(col(valCol)).as("pmax"))
       .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-    val prefix = pidMax.scanLeft((Int.MinValue, Option.empty[Long])) {
-      case ((_, run), (pid, pmax)) =>
-        (pid, Some(run.fold(pmax)(math.max(_, pmax))))
-    }.sliding(2).collect { case Array((_, run), (pid, _)) =>
-      (pid, run.map(Long.box).orNull)
-    }.toSeq
-    val prefixDf = broadcast(prefix.toDF("__pid", "__prefix_max"))
+    val prefixDf = broadcast(exclusiveMax(pidMax.toSeq).toDF("__pid", "__prefix_max"))
     val wLocal = Window.partitionBy(col("__pid")).orderBy(col(keyCol))
       .rangeBetween(Window.unboundedPreceding, -1)
     sp.join(prefixDf, Seq("__pid"))

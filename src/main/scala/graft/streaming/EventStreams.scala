@@ -422,10 +422,7 @@ object EventStreams extends Serializable {
   private[graft] def dedupIndexApplyBatch(batch: DataFrame, batchId: Long,
       indexTable: String, pairsDir: String, nBuckets: Int = 8): Unit = {
     val spark = batch.sparkSession
-    val batchDir = new org.apache.hadoop.fs.Path(s"$pairsDir/batch-$batchId")
-    val fs = batchDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = new org.apache.hadoop.fs.Path(batchDir, "_APPLIED")
-    if (!fs.exists(marker)) {
+    applyOnce(spark, pairsDir, batchId) { (batchDir, _) =>
       // localCheckpoint, not persist (round 18, the rank-kernel
       // finding): the pairs write and the index append are separate
       // driver actions — as a persist each re-planned an
@@ -434,52 +431,48 @@ object EventStreams extends Serializable {
       // ContextCleaner-freed when the batch-local reference drops.
       val banded = graft.operators.Dedup.bandedOf(
         graft.operators.Dedup.minhashSigTableOf(batch)).localCheckpoint()
-      locally {
-        def collide(index: DataFrame, cond: org.apache.spark.sql.Column) =
-          graft.operators.Dedup.pairsFromCollisions(
-            banded.as("a").join(index.as("b"),
-              col("a.band_key") === col("b.band_key") && cond))
-        val vsNew = collide(banded, col("a.doc_id") < col("b.doc_id"))
-        val newPairs =
-          if (spark.catalog.tableExists(indexTable))
-            collide(spark.table(indexTable), col("a.doc_id") =!= col("b.doc_id"))
-              .unionByName(vsNew)
-              // overlaps arise when a crashed replay re-probes rows the
-              // failed attempt already indexed — collapse to one pair
-              .groupBy(col("doc_a"), col("doc_b"))
-              .agg(first(col("est_jaccard")).as("est_jaccard"))
-          else vsNew
-        // pairs write and index append write disjoint artifacts off the
-        // same checkpointed banded frame — overlapped (guide §2.6).
-        // Safe even if the append commits while the pairs job is
-        // running and its index scan re-lists the table: the probe
-        // would then see this batch's own rows, but those collisions
-        // are exactly vsNew's pairs, and the (doc_a, doc_b) collapse
-        // absorbs them — the same argument that already covers a
-        // crashed replay re-probing rows the failed attempt indexed.
-        // Marker still last, after both complete.
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        import scala.concurrent.duration.Duration
-        val dpool = java.util.concurrent.Executors.newFixedThreadPool(2)
-        implicit val ec: ExecutionContext =
-          ExecutionContext.fromExecutorService(dpool)
-        try {
-          val pairsF = Future {
-            spark.sparkContext.setJobDescription("dedup batch: pairs (overlapped)")
-            newPairs.write.mode("overwrite").parquet(batchDir.toString)
-          }
-          val appendF = Future {
-            spark.sparkContext.setJobDescription("dedup batch: index append (overlapped)")
-            banded.write.mode("append").format("parquet")
-              .bucketBy(nBuckets, "band_key")
-              .saveAsTable(indexTable)
-          }
-          Await.result(pairsF, Duration.Inf)
-          Await.result(appendF, Duration.Inf)
-        } finally { dpool.shutdown() }
-        fs.create(marker, true).close()
-      }
+      def collide(index: DataFrame, cond: org.apache.spark.sql.Column) =
+        graft.operators.Dedup.pairsFromCollisions(
+          banded.as("a").join(index.as("b"),
+            col("a.band_key") === col("b.band_key") && cond))
+      val vsNew = collide(banded, col("a.doc_id") < col("b.doc_id"))
+      val newPairs =
+        if (spark.catalog.tableExists(indexTable))
+          collide(spark.table(indexTable), col("a.doc_id") =!= col("b.doc_id"))
+            .unionByName(vsNew)
+            // overlaps arise when a crashed replay re-probes rows the
+            // failed attempt already indexed — collapse to one pair
+            .groupBy(col("doc_a"), col("doc_b"))
+            .agg(first(col("est_jaccard")).as("est_jaccard"))
+        else vsNew
+      // pairs write and index append write disjoint artifacts off the
+      // same checkpointed banded frame — overlapped (guide §2.6).
+      // Safe even if the append commits while the pairs job is
+      // running and its index scan re-lists the table: the probe
+      // would then see this batch's own rows, but those collisions
+      // are exactly vsNew's pairs, and the (doc_a, doc_b) collapse
+      // absorbs them — the same argument that already covers a
+      // crashed replay re-probing rows the failed attempt indexed.
+      // Marker still last, after both complete.
+      graft.Stages.all(spark)(
+        "dedup batch: pairs (overlapped)" -> { () =>
+          newPairs.write.mode("overwrite").parquet(batchDir.toString) },
+        "dedup batch: index append (overlapped)" -> { () =>
+          banded.write.mode("append").format("parquet")
+            .bucketBy(nBuckets, "band_key")
+            .saveAsTable(indexTable) })
     }
+  }
+
+  /** Runs `apply` on `dir/batch-<batchId>` unless it carries the
+    * _APPLIED marker, then writes the marker LAST: the replay guard of
+    * the appending apply-batch kernels. */
+  private def applyOnce(spark: SparkSession, dir: String, batchId: Long)(
+      apply: (org.apache.hadoop.fs.Path, org.apache.hadoop.fs.FileSystem) => Unit): Unit = {
+    val batchDir = new org.apache.hadoop.fs.Path(s"$dir/batch-$batchId")
+    val fs = batchDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val marker = new org.apache.hadoop.fs.Path(batchDir, "_APPLIED")
+    if (!fs.exists(marker)) { apply(batchDir, fs); fs.create(marker, true).close() }
   }
 
   /** INCREMENTAL ANN-index maintenance — the streaming twin of
@@ -528,10 +521,7 @@ object EventStreams extends Serializable {
     import graft.functions.VectorFunctions.cosineSim
     val spark = batch.sparkSession
     import spark.implicits._
-    val batchDir = new org.apache.hadoop.fs.Path(s"$topkDir/batch-$batchId")
-    val fs = batchDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = new org.apache.hadoop.fs.Path(batchDir, "_APPLIED")
-    if (!fs.exists(marker)) {
+    applyOnce(spark, topkDir, batchId) { (batchDir, _) =>
       // the index rows carry their writing batch id: the crash-window
       // probe excludes exactly the crashed attempt's rows (not every
       // stored row sharing a vec_id — a later batch may legitimately
@@ -548,69 +538,54 @@ object EventStreams extends Serializable {
             col("embedding"), centroids).as("cent_id"),
           lit(batchId).as("batch_id"))
         .localCheckpoint()
-      locally {
-        val result =
-          if (spark.catalog.tableExists(indexTable)) {
-            // probe + presentation are the SHARED Similarity helpers, so
-            // the streaming twin can never diverge from the batch
-            // operator's tie-breaking or quantization
-            val probes = graft.operators.Similarity.probesOf(
-              assigned.select(col("vec_id").as("query_id"),
-                col("embedding").as("q_emb")),
-              centroids, nprobe)
-            val scored = spark.table(indexTable)
-              // crash-window replay: the failed attempt may have already
-              // appended THIS batch — exclude only ITS rows, so the
-              // rewritten batch output is identical to the pre-crash
-              // output without hiding older same-id versions
-              .filter(col("batch_id") =!= batchId)
-              .join(probes, Seq("cent_id"))
-              // an updated vector must not return its own stored
-              // version as a neighbor
-              .filter(col("vec_id") =!= col("query_id"))
-              .withColumn("raw_sim", cosineSim(col("q_emb"), col("embedding")))
-              // a vec_id stored by several batches scores as its best
-              // version — max, not first: deterministic under any
-              // evaluation order
-              .groupBy(col("query_id"), col("vec_id"))
-              .agg(max(col("raw_sim")).as("raw_sim"))
-            graft.operators.Similarity.topkPresent(scored, k)
-          } else
-            Seq.empty[(Long, Long, Long, Double)]
-              .toDF("query_id", "rank", "neighbor_id", "sim")
-        // top-k write and index append overlapped (guide §2.6): both
-        // read only the checkpointed assigned frame. Safe even if the
-        // append commits while the result job is running and its index
-        // scan re-lists the table — the probe filters
-        // batch_id =!= batchId, which excludes exactly the rows the
-        // concurrent append adds. The idempotent-append probe (a
-        // crashed attempt that already appended must not append a
-        // second copy) stays strictly BEFORE the append on its own
-        // thread. Marker still last, after both complete.
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        import scala.concurrent.duration.Duration
-        val apool = java.util.concurrent.Executors.newFixedThreadPool(2)
-        implicit val ec: ExecutionContext =
-          ExecutionContext.fromExecutorService(apool)
-        try {
-          val resultF = Future {
-            spark.sparkContext.setJobDescription("ann batch: topk (overlapped)")
-            result.write.mode("overwrite").parquet(batchDir.toString)
-          }
-          val appendF = Future {
-            spark.sparkContext.setJobDescription("ann batch: index append (overlapped)")
-            val alreadyAppended = spark.catalog.tableExists(indexTable) &&
-              !spark.table(indexTable).filter(col("batch_id") === batchId).isEmpty
-            if (!alreadyAppended)
-              assigned.write.mode("append").format("parquet")
-                .bucketBy(nBuckets, "cent_id")
-                .saveAsTable(indexTable)
-          }
-          Await.result(resultF, Duration.Inf)
-          Await.result(appendF, Duration.Inf)
-        } finally { apool.shutdown() }
-        fs.create(marker, true).close()
-      }
+      val result =
+        if (spark.catalog.tableExists(indexTable)) {
+          // probe + presentation are the SHARED Similarity helpers, so
+          // the streaming twin can never diverge from the batch
+          // operator's tie-breaking or quantization
+          val probes = graft.operators.Similarity.probesOf(
+            assigned.select(col("vec_id").as("query_id"),
+              col("embedding").as("q_emb")),
+            centroids, nprobe)
+          val scored = spark.table(indexTable)
+            // crash-window replay: the failed attempt may have already
+            // appended THIS batch — exclude only ITS rows, so the
+            // rewritten batch output is identical to the pre-crash
+            // output without hiding older same-id versions
+            .filter(col("batch_id") =!= batchId)
+            .join(probes, Seq("cent_id"))
+            // an updated vector must not return its own stored
+            // version as a neighbor
+            .filter(col("vec_id") =!= col("query_id"))
+            .withColumn("raw_sim", cosineSim(col("q_emb"), col("embedding")))
+            // a vec_id stored by several batches scores as its best
+            // version — max, not first: deterministic under any
+            // evaluation order
+            .groupBy(col("query_id"), col("vec_id"))
+            .agg(max(col("raw_sim")).as("raw_sim"))
+          graft.operators.Similarity.topkPresent(scored, k)
+        } else
+          Seq.empty[(Long, Long, Long, Double)]
+            .toDF("query_id", "rank", "neighbor_id", "sim")
+      // top-k write and index append overlapped (guide §2.6): both
+      // read only the checkpointed assigned frame. Safe even if the
+      // append commits while the result job is running and its index
+      // scan re-lists the table — the probe filters
+      // batch_id =!= batchId, which excludes exactly the rows the
+      // concurrent append adds. The idempotent-append probe (a
+      // crashed attempt that already appended must not append a
+      // second copy) stays strictly BEFORE the append in its own
+      // stage. Marker still last, after both complete.
+      graft.Stages.all(spark)(
+        "ann batch: topk (overlapped)" -> { () =>
+          result.write.mode("overwrite").parquet(batchDir.toString) },
+        "ann batch: index append (overlapped)" -> { () =>
+          val alreadyAppended = spark.catalog.tableExists(indexTable) &&
+            !spark.table(indexTable).filter(col("batch_id") === batchId).isEmpty
+          if (!alreadyAppended)
+            assigned.write.mode("append").format("parquet")
+              .bucketBy(nBuckets, "cent_id")
+              .saveAsTable(indexTable) })
     }
   }
 
@@ -675,47 +650,42 @@ object EventStreams extends Serializable {
       keeperTable: String, cursorDir: String, outDir: String,
       budget: Long = 2000L, nBuckets: Int = 8): Unit = {
     val spark = batch.sparkSession
-    import spark.implicits._
-    val batchDir = new org.apache.hadoop.fs.Path(s"$outDir/batch-$batchId")
-    val fs = batchDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = new org.apache.hadoop.fs.Path(batchDir, "_APPLIED")
-    if (fs.exists(marker)) return
-    val storeExists = spark.catalog.tableExists(keeperTable)
-    // the batch's own keeper candidates: first q_ok doc per hash, as
-    // the SAME unordered window aggregate the one-shot flagship uses
-    // (TextAnalysis.txPipeline) — round 18: the old groupBy + join-back
-    // paid a second exchange of the scored rows plus a join; the window
-    // rides the text_hash exchange the store probe needs anyway, and
-    // with the scored subtree appearing once in one plan its persist is
-    // gone too
-    val withBk = graft.operators.TextAnalysis.curationScored(batch)
-      .withColumn("batch_keeper",
-        min(when(col("q_ok"), col("doc_id")))
-          .over(org.apache.spark.sql.expressions.Window
-            .partitionBy(col("text_hash"))))
-    val keyed =
-      if (storeExists) {
-        // min() absorbs crash-window duplicate rows in the store
-        val stored = spark.table(keeperTable)
-          .groupBy(col("text_hash")).agg(min(col("keeper_id")).as("stored_keeper"))
-        withBk.join(stored, Seq("text_hash"), "left")
-      } else withBk.withColumn("stored_keeper", lit(null).cast("long"))
-    // localCheckpoint, not persist (round 18, the rank-kernel finding):
-    // the manifest write, the cursor-advance aggregate and the keeper
-    // append are three SEPARATE driver actions — as a persist each one
-    // re-planned an InMemoryTableScan + AQE pass; as an eager checkpoint
-    // they all read a bare ExistingRDD. The materialization also severs
-    // the lineage through spark.table(keeperTable), so the append below
-    // never reads the table it writes. Batch-bounded blocks,
-    // ContextCleaner-freed when the batch-local reference drops.
-    val labeled = keyed
-      // a stored keeper arrived in an earlier batch → smaller doc_id
-      .withColumn("keeper", coalesce(col("stored_keeper"), col("batch_keeper")))
-      .withColumn("drop_reason",
-        when(!col("q_ok"), "quality")
-          .when(col("doc_id") =!= col("keeper"), "duplicate"))
-      .localCheckpoint()
-    locally {
+    applyOnce(spark, outDir, batchId) { (batchDir, fs) =>
+      val storeExists = spark.catalog.tableExists(keeperTable)
+      // the batch's own keeper candidates: first q_ok doc per hash, as
+      // the SAME unordered window aggregate the one-shot flagship uses
+      // (TextAnalysis.txPipeline) — round 18: the old groupBy + join-back
+      // paid a second exchange of the scored rows plus a join; the window
+      // rides the text_hash exchange the store probe needs anyway, and
+      // with the scored subtree appearing once in one plan its persist is
+      // gone too
+      val withBk = graft.operators.TextAnalysis.curationScored(batch)
+        .withColumn("batch_keeper",
+          min(when(col("q_ok"), col("doc_id")))
+            .over(org.apache.spark.sql.expressions.Window
+              .partitionBy(col("text_hash"))))
+      val keyed =
+        if (storeExists) {
+          // min() absorbs crash-window duplicate rows in the store
+          val stored = spark.table(keeperTable)
+            .groupBy(col("text_hash")).agg(min(col("keeper_id")).as("stored_keeper"))
+          withBk.join(stored, Seq("text_hash"), "left")
+        } else withBk.withColumn("stored_keeper", lit(null).cast("long"))
+      // localCheckpoint, not persist (round 18, the rank-kernel finding):
+      // the manifest write, the cursor-advance aggregate and the keeper
+      // append are three SEPARATE driver actions — as a persist each one
+      // re-planned an InMemoryTableScan + AQE pass; as an eager checkpoint
+      // they all read a bare ExistingRDD. The materialization also severs
+      // the lineage through spark.table(keeperTable), so the append below
+      // never reads the table it writes. Batch-bounded blocks,
+      // ContextCleaner-freed when the batch-local reference drops.
+      val labeled = keyed
+        // a stored keeper arrived in an earlier batch → smaller doc_id
+        .withColumn("keeper", coalesce(col("stored_keeper"), col("batch_keeper")))
+        .withColumn("drop_reason",
+          when(!col("q_ok"), "quality")
+            .when(col("doc_id") =!= col("keeper"), "duplicate"))
+        .localCheckpoint()
       // pack cursor after the previous batch: one row per SOURCE —
       // driver-bounded by contract (the ANN-centroid bounded-literal
       // precedent), so it lives as a plain FS sidecar read/written
@@ -746,14 +716,8 @@ object EventStreams extends Serializable {
       // and cursor file are whole rewrites, a crashed attempt's keeper
       // append lands in stored_keeper (see the scaladoc contract), and
       // the _APPLIED marker still goes last, after all three complete.
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      val cpool = java.util.concurrent.Executors.newFixedThreadPool(3)
-      implicit val ec: ExecutionContext =
-        ExecutionContext.fromExecutorService(cpool)
-      try {
-        val manifestF = Future {
-          spark.sparkContext.setJobDescription("curation batch: manifest (overlapped)")
+      graft.Stages.all(spark)(
+        "curation batch: manifest (overlapped)" -> { () =>
           labeled
             .withColumn("n_toks", when(col("drop_reason").isNull, col("toks")))
             .withColumn("cum_toks",
@@ -765,11 +729,10 @@ object EventStreams extends Serializable {
               when(col("drop_reason").isNull,
                 expr(s"(cum_toks - 1) div $budget")).as("pack_id"))
             .write.mode("overwrite").parquet(batchDir.toString)
-        }
+        },
         // advance the cursor: previous totals + this batch's kept
         // tokens, rewritten whole (replay-safe), sorted for determinism
-        val cursorF = Future {
-          spark.sparkContext.setJobDescription("curation batch: cursor advance (overlapped)")
+        "curation batch: cursor advance (overlapped)" -> { () =>
           val batchTotals = labeled.filter(col("drop_reason").isNull)
             .groupBy(col("source")).agg(sum(col("toks")).as("t"))
             .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -778,7 +741,7 @@ object EventStreams extends Serializable {
             .mkString("\n")
           val co = fs.create(cursorFile(batchId), true)
           try co.write(mergedTsv.getBytes("UTF-8")) finally co.close()
-        }
+        },
         // grow the keeper store: only hashes this batch introduced —
         // read off the CHECKPOINTED labeled frame (a new keeper is
         // exactly a q_ok row that is its own batch keeper with no
@@ -791,8 +754,7 @@ object EventStreams extends Serializable {
         // keeper table, so the append never reads the table it writes
         // (the per-frame checkpoint this filter used to carry is gone
         // — one job per batch saved).
-        val keeperF = Future {
-          spark.sparkContext.setJobDescription("curation batch: keeper append (overlapped)")
+        "curation batch: keeper append (overlapped)" -> { () =>
           labeled
             .filter(col("q_ok") && col("stored_keeper").isNull &&
               col("doc_id") === col("batch_keeper"))
@@ -801,12 +763,7 @@ object EventStreams extends Serializable {
             .write.mode("append").format("parquet")
             .bucketBy(nBuckets, "text_hash")
             .saveAsTable(keeperTable)
-        }
-        Await.result(manifestF, Duration.Inf)
-        Await.result(cursorF, Duration.Inf)
-        Await.result(keeperF, Duration.Inf)
-      } finally { cpool.shutdown() }
-      fs.create(marker, true).close()
+        })
     }
   }
 
@@ -897,48 +854,22 @@ object EventStreams extends Serializable {
     // serializing after it. Submitted FIFO with dedup first so the
     // dominant stage keeps resource priority; per-stage replay
     // contracts (_APPLIED markers, whole-dir rewrites) are unchanged,
-    // and a failure in any stage rethrows through Await before the
-    // batch is considered applied.
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    // Force the operator singletons' init on THIS thread before
-    // forking: Dedup/Similarity/TextAnalysis reference each other in
-    // their object initializers, which is fine single-threaded (JVM
-    // class init is re-entrant) but DEADLOCKS when two pool threads
-    // first-touch different members of the cycle concurrently — each
-    // blocks on the other's class-init monitor (observed hang, thread
-    // dump in OPTIMIZATION_r18.md §11).
-    locally {
-      val _ = (graft.operators.Dedup.queries.size,
-        graft.operators.Similarity.queries.size,
-        graft.operators.TextAnalysis.queries.size)
-    }
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-    try {
-      val dedupF = Future {
-        spark.sparkContext.setJobDescription("statement batch: dedup index (overlapped)")
+    // and a failure in any stage cancels the others and rethrows
+    // before the batch is considered applied.
+    graft.Stages.all(spark)(
+      "statement batch: dedup index (overlapped)" -> { () =>
         dedupIndexApplyBatch(
           extracted.select(col("doc_id"), col("content").as("text")),
-          batchId, dedupIndexTable, pairsDir)
-      }
-      val annF = Future {
-        spark.sparkContext.setJobDescription("statement batch: ann index (overlapped)")
+          batchId, dedupIndexTable, pairsDir) },
+      "statement batch: ann index (overlapped)" -> { () =>
         annIndexApplyBatch(
           extracted.select(col("doc_id").as("vec_id"),
             graft.functions.VectorFunctions
               .hashedTextEmbedding(col("content")).as("embedding")),
-          batchId, centroids, annIndexTable, topkDir, nprobe, k, 8)
-      }
-      val manifestF = Future {
-        spark.sparkContext.setJobDescription("statement batch: manifest write (overlapped)")
+          batchId, centroids, annIndexTable, topkDir, nprobe, k, 8) },
+      "statement batch: manifest write (overlapped)" -> { () =>
         extracted.drop("content", "doc_id")
-          .write.mode("overwrite").parquet(s"$extractedDir/batch-$batchId")
-      }
-      Await.result(dedupF, Duration.Inf)
-      Await.result(annF, Duration.Inf)
-      Await.result(manifestF, Duration.Inf)
-    } finally { pool.shutdown() }
+          .write.mode("overwrite").parquet(s"$extractedDir/batch-$batchId") })
   }
 
   /** STREAMING event-rate anomaly detection — the online variant of

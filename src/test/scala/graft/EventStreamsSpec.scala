@@ -934,6 +934,84 @@ class EventStreamsSpec extends SparkTestBase {
       "asymmetric replay appended a duplicate ANN batch copy")
   }
 
+  test("statement batch: a failed stage leaves no marker and no running job; the replay converges") {
+    import java.nio.file.{Files, Paths}
+    import org.apache.spark.sql.functions.xxhash64
+    // the two dated folders, plus a re-transmitted batch-0 statement in
+    // batch 1 so the dedup stage has a real cross-batch pair to emit
+    val stmts = Files.createTempDirectory("graft_fault_src").toString
+    Seq("20240115", "20240116").foreach { d =>
+      Files.createDirectories(Paths.get(s"$stmts/$d"))
+      new java.io.File(s"data/statements/$d").listFiles().foreach { f =>
+        Files.copy(f.toPath, Paths.get(s"$stmts/$d/${f.getName}")) }
+    }
+    Files.copy(Paths.get("data/statements/20240115/haomai_shengou_20240115.txt"),
+      Paths.get(s"$stmts/20240116/haomai_shengou_retrans_20240116.txt"))
+    def batchOf(date: String) = operators.FundEtl.loadStatements(spark, stmts)
+      .filter(col("batch_date") === date)
+    val centroids: Seq[(Long, Seq[Float])] = batchOf("20240115")
+      .select(xxhash64(col("file_name")),
+        graft.functions.VectorFunctions.hashedTextEmbedding(col("content")))
+      .collect().map(r => (r.getLong(0), r.getSeq[Float](1))).sortBy(_._1).take(4).toSeq
+    final case class Run(ext: String, pairs: String, topk: String, dd: String, ann: String)
+    def fresh(name: String): Run = {
+      val run = Run(Files.createTempDirectory(s"graft_${name}_ext").toString,
+        Files.createTempDirectory(s"graft_${name}_pairs").toString,
+        Files.createTempDirectory(s"graft_${name}_topk").toString,
+        s"${name}_band_index", s"${name}_ivf_index")
+      Seq(run.dd, run.ann).foreach { t =>
+        spark.sql(s"DROP TABLE IF EXISTS $t")
+        new scala.reflect.io.Directory(new java.io.File(s"spark-warehouse/$t")).deleteRecursively()
+      }
+      run
+    }
+    def applyBatch(r: Run, date: String, id: Long): Unit =
+      EventStreams.statementPipelineApplyBatch(batchOf(date), id, r.ext, r.dd,
+        r.pairs, centroids, r.ann, r.topk, 2, 3)
+    def outputs(r: Run) = {
+      def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
+      (rows(spark.read.parquet(s"${r.ext}/batch-1")),
+        rows(spark.read.option("recursiveFileLookup", "true").parquet(r.pairs)),
+        rows(spark.read.parquet(s"${r.topk}/batch-1")),
+        rows(spark.table(r.dd)), rows(spark.table(r.ann)))
+    }
+    val clean = fresh("fault_free")
+    val faulty = fresh("faulted")
+    Seq(clean, faulty).foreach(applyBatch(_, "20240115", 0L))
+    applyBatch(clean, "20240116", 1L)
+
+    // the fault: the manifest stage's parent path is a regular file
+    val ext = Paths.get(faulty.ext)
+    val aside = Paths.get(faulty.ext + ".aside")
+    Files.move(ext, aside)
+    Files.createFile(ext)
+    val log = new JobLog
+    spark.sparkContext.addSparkListener(log)
+    val since = System.currentTimeMillis()
+    try {
+      intercept[Exception](applyBatch(faulty, "20240116", 1L))
+      val returned = System.currentTimeMillis()
+      Seq(faulty.pairs, faulty.topk).foreach { d =>
+        assert(!new java.io.File(s"$d/batch-1/_APPLIED").exists, s"$d: marker after a failed batch")
+      }
+      assert(log.runningAt(since, returned).isEmpty, "a sibling stage's job outlived the call")
+      info(s"sibling jobs cancelled: ${log.staged(since).values.map(_.desc).toSeq.sorted}")
+    } finally spark.sparkContext.removeSparkListener(log)
+
+    // fix the path and replay the same batch id
+    Files.delete(ext)
+    Files.move(aside, ext)
+    applyBatch(faulty, "20240116", 1L)
+    val (ce, cp, ct, cd, ca) = outputs(clean)
+    val (fe, fp, ft, fd, fa) = outputs(faulty)
+    assert(fe == ce, "replayed extract output diverges from the fault-free run")
+    assert(fp == cp, "replayed pairs diverge from the fault-free run")
+    assert(ft == ct, "replayed top-k diverges from the fault-free run")
+    assert(fd == cd, "replayed band index diverges from the fault-free run")
+    assert(fa == ca, "replayed ivf index diverges from the fault-free run")
+    assert(cp.nonEmpty && ct.nonEmpty, "the fault-free run produced no pairs or neighbours")
+  }
+
   test("attributeJoin matches purchases to preceding clicks within the window") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._

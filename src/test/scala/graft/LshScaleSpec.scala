@@ -17,7 +17,7 @@ class LshScaleSpec extends SparkTestBase {
       .reduce(_ unionAll _)
 
     def maxOccupancy(nPlanes: Int): Long = {
-      val planes = Similarity.makePlanes(nPlanes)
+      val planes = operators.OracleSql.makePlanes(nPlanes)
       big.select(Similarity.bucketOf(col("embedding"), planes).as("b"))
         .groupBy(col("b")).count()
         .agg(max(col("count"))).head().getLong(0)
@@ -43,8 +43,8 @@ class LshScaleSpec extends SparkTestBase {
     assert(Similarity.pFor(1000000) == 15)
     // plane sets nest: growing the corpus only SPLITS buckets (the
     // seed-42 stream is a prefix), never reshuffles existing ones
-    val p6 = Similarity.makePlanes(6)
-    val p9 = Similarity.makePlanes(9)
+    val p6 = operators.OracleSql.makePlanes(6)
+    val p9 = operators.OracleSql.makePlanes(9)
     assert(p9.take(6) == p6)
   }
 }

@@ -290,6 +290,19 @@ class OperatorsSpec extends SparkTestBase {
     }
   }
 
+  test("q06 revenue does not depend on lineitem row order") {
+    // the committed sf0.01 tables: their q06 sum lands on a .xx5
+    // boundary, where a double sum's rounding follows the row order
+    val base = "perfbench/base"
+    val reversed = java.nio.file.Files.createTempDirectory("graft_q06").toString
+    spark.read.parquet(s"$base/lineitem.parquet")
+      .withColumn("__i", monotonically_increasing_id())
+      .coalesce(1).sortWithinPartitions(col("__i").desc).drop("__i")
+      .write.parquet(s"$reversed/lineitem.parquet")
+    def q06(d: String) = operators.Relational.q06RevenueFilter(spark, d).head().getDouble(0)
+    assert(q06(reversed) == q06(base))
+  }
+
   test("q07 topk is ordered and bounded") {
     val rows = operators.Relational.q07TopK(spark, sfDir).collect()
     assert(rows.length == 20)
