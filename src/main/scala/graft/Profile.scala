@@ -1,635 +1,223 @@
 package graft
 
-import org.apache.spark.sql.functions.col
+import scala.collection.mutable
+import scala.util.{Failure, Success, Try}
+import com.fasterxml.jackson.databind.PropertyNamingStrategies
+import com.fasterxml.jackson.databind.json.JsonMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
+import org.apache.spark.scheduler._
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
+import org.apache.spark.sql.graft.Bridge
 
-/** Dev tool: time individual operators (or all) at a given SF.
+/** Dev tool: where one operator's time goes, job by job.
   *
-  * Usage: runMain graft.Profile <sfDir> [queryName ...]
+  * Usage: runMain graft.Profile <sfDir> [name ...]
+  *
+  * A name is a registry op or `statement_batch_probe` (the streaming
+  * flagship's cold micro-batch, built as Bench times it); no names
+  * profiles the whole registry. Each name runs twice in one session —
+  * the first run pays codegen — and the cache is cleared after each
+  * run. A run has two phases, each under its own job group:
+  *  - `build` is the call `fn(spark, sfDir)`: ops that collect or
+  *    checkpoint while building their frame run those jobs here, and
+  *    `explain()` never shows them;
+  *  - `action` writes the whole result to the noop sink, so no
+  *    projection is pruned the way a `count()` prunes it.
+  * The probe's `build` is one batch apply; it returns no frame, so it
+  * has no action. Within a phase jobs are grouped by job description
+  * (the [[Stages.all]] labels, whose threads inherit the phase's
+  * group) or, without one, by call site — for a SQL execution's jobs,
+  * the site that started the execution. Each run prints one JSON line
+  * with the groups, the action's exchange count and its final executed
+  * plan.
   */
 object Profile {
+  /** Totals of the jobs of one phase that share a label. `wallMs` is
+    * the time at least one of them was running.
+    */
+  final case class Group(label: String, jobs: Int, stages: Int, tasks: Long,
+      wallMs: Long, execRunMs: Long, execCpuMs: Long, shuffleReadBytes: Long,
+      shuffleWriteBytes: Long, spillBytes: Long, resultBytes: Long)
+
+  /** A phase's wall time and its groups in order of first job. */
+  final case class Phase(ms: Long, groups: Seq[Group])
+
+  final case class Run(op: String, run: Int, build: Phase, action: Option[Phase],
+      exchanges: Option[Int], plan: Option[String], error: Option[String])
+
+  val statementProbe = "statement_batch_probe"
+  private val groupPrefix = "graft-profile-"
+
+  private lazy val json = JsonMapper.builder().addModule(DefaultScalaModule)
+    .propertyNamingStrategy(PropertyNamingStrategies.SNAKE_CASE).build()
+
+  def toJson(r: Run): String = json.writeValueAsString(r)
+
   def main(args: Array[String]): Unit = {
+    require(args.nonEmpty, "usage: Profile <sfDir> [name ...]")
     val spark = GraftSession.build(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
-    val d = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = if (args.length > 1) args.drop(1).toSeq else SparkEntry.queries.keys.toSeq.sorted
-    spark.range(1).count()
-    names.foreach {
-      case "--containment-volume" =>
-        // the dd_containment scale diagnostic: candidate volume is what
-        // the 2%-df cap must keep bounded as the corpus grows
-        val nDocs = operators.Dedup.documentsCount(spark, d)
-        // Persist the candidate stage so the verify timing below reuses
-        // it through the CacheManager (dd_containment rebuilds the
-        // identical candidate plan internally) — without the persist,
-        // the "verified" number re-pays the whole candidate join and
-        // the stage split this flag exists to measure is double-counted.
-        // Both frames' lifecycles live here (the operators module keeps
-        // no caller-invisible cached state).
-        val sh = operators.Dedup.containmentShingles(spark, d).persist()
-        val cands = operators.Dedup.containmentCandidates(spark, d, sh).persist()
-        val t0 = System.nanoTime()
-        val cand = cands.count()
-        val t1 = System.nanoTime()
-        val verified = SparkEntry.queries("dd_containment")(spark, d).count()
-        val t2 = System.nanoTime()
-        cands.unpersist(); sh.unpersist()
-        println(f"[profile] containment-volume docs=$nDocs candidates=$cand " +
-          f"(${(t1 - t0) / 1e9}%.2f s) verified=$verified (${(t2 - t1) / 1e9}%.2f s) " +
-          f"cand_per_doc=${cand.toDouble / nDocs}%.2f")
-      case "--cc-compare" =>
-        // head-to-head of the two DISTRIBUTED CC algorithms on the same
-        // pair graph (driver fast path disabled): pointer-jumping
-        // fixpoint vs alternating large-star/small-star. Informs which
-        // one ddCluster's >threshold route should use at a given graph
-        // shape.
-        val pairs = operators.Dedup
-          .minhashPairs(spark, d).select(col("doc_a"), col("doc_b"))
-          .persist()
-        val nPairs = pairs.count()
-        val t0 = System.nanoTime()
-        val pj = operators.Dedup.connectedComponentsPointerJump(pairs)
-        val pjRows = pj.count()
-        val t1 = System.nanoTime()
-        val st = operators.Dedup.connectedComponentsStar(pairs)
-        val stRows = st.count()
-        val t2 = System.nanoTime()
-        val diff = pj.exceptAll(st).count() + st.exceptAll(pj).count()
-        pairs.unpersist()
-        println(f"[profile] cc-compare pairs=$nPairs " +
-          f"pointer_jump=${(t1 - t0) / 1e9}%.2f s ($pjRows nodes) " +
-          f"star=${(t2 - t1) / 1e9}%.2f s ($stRows nodes) label_diff=$diff")
-      case "--cc-star" =>
-        // star CC alone on the pair graph, with per-round edge
-        // telemetry — the 100×-scale measurement (pointer jumping is
-        // deliberately excluded: its non-contracting per-round shuffle
-        // is exactly why it loses at this size, and --cc-compare covers
-        // the head-to-head at sizes where both finish politely)
-        val pairs = operators.Dedup
-          .minhashPairs(spark, d).select(col("doc_a"), col("doc_b"))
-          .persist()
-        val nPairs = pairs.count()
-        val roundEdges = scala.collection.mutable.ArrayBuffer.empty[Long]
-        val t0 = System.nanoTime()
-        val labels = operators.Dedup.connectedComponentsStar(pairs, roundEdges)
-        val nNodes = labels.count()
-        val dt = (System.nanoTime() - t0) / 1e9
-        pairs.unpersist()
-        println(f"[profile] cc-star pairs=$nPairs nodes=$nNodes " +
-          f"time=$dt%.2f s rounds=${roundEdges.size} " +
-          f"edges_per_round=${roundEdges.mkString(",")}")
-      case "--lsh-skew" =>
-        // dd_minhash_lsh's bucket join under genuinely hot bands: the
-        // jittered corpora make every copy a true near-dup, so band
-        // buckets grow with the near-dup cluster size. Two facts decide
-        // whether AQE skew-splitting is needed: the band-bucket size
-        // distribution (join output is Σ bucket² — the algorithmic
-        // cost no split changes), and whether the executed adaptive
-        // plan actually engaged a skew split (parallelism repair).
-        val banded = operators.Dedup.bandedForDiagnostics(spark, d).persist()
-        val sizes = banded.groupBy(col("band_key"))
-          .agg(org.apache.spark.sql.functions.count(
-            org.apache.spark.sql.functions.lit(1)).as("n"))
-          .select(col("n")).orderBy(col("n").desc)
-        val top = sizes.limit(5).collect().map(_.getLong(0))
-        val stats = sizes.agg(
-          org.apache.spark.sql.functions.count(col("n")),
-          org.apache.spark.sql.functions.expr("approx_percentile(n, 0.5)"),
-          org.apache.spark.sql.functions.max(col("n"))).head
-        // unpersist BEFORE the timing: minhashPairs' band subtree is
-        // plan-identical to the cached diagnostics table, so Spark's
-        // cache manager would substitute InMemoryRelation and the
-        // timed join would read cache-fed input, not the
-        // deployment-shaped scan the telemetry claims to describe
-        banded.unpersist(blocking = true)
-        val pairs = operators.Dedup.minhashPairs(spark, d)
-        val t0 = System.nanoTime()
-        // execute THIS DataFrame's plan (toRdd.count), not a derived
-        // agg rewrite: Dataset.count() builds its own QueryExecution
-        // and would leave pairs' adaptive plan un-finalized
-        // (isFinalPlan=false — no skew re-plan to observe)
-        val nPairs = pairs.queryExecution.toRdd.count()
-        val dt = (System.nanoTime() - t0) / 1e9
-        val plan = pairs.queryExecution.executedPlan.toString
-        val skewed = plan.contains("skew=true")
-        require(plan.contains("isFinalPlan=true") || !plan.contains("AdaptiveSparkPlan"),
-          "adaptive plan did not finalize — the skew reading would be vacuous")
-        println(f"[profile] lsh-skew buckets=${stats.getLong(0)} " +
-          f"median=${stats.get(1)} max=${stats.get(2)} top5=${top.mkString(",")} " +
-          f"pairs=$nPairs join=$dt%.2f s aqe_skew_split=$skewed")
-      case "--codec-scale" =>
-        // real-decoder listing/decode amortization: time the SAME
-        // decode passes over the committed corpora (67 images / 55
-        // clips) and factor-scaled generated corpora (gen_images.py /
-        // gen_audio.py with a dst+factor argv; dirs via env). A
-        // binaryFile source that amortizes listing shows far-sublinear
-        // growth in file count; a per-file-overhead one shows linear.
-        val imgBig = sys.env.getOrElse("SPARK_GRAFT_IMAGES_DIR", "/tmp/images10x")
-        val audBig = sys.env.getOrElse("SPARK_GRAFT_AUDIO_DIR", "/tmp/audio10x")
-        def time(label: String, mk: () => org.apache.spark.sql.DataFrame): Unit = {
-          val t0 = System.nanoTime()
-          val n = mk().count()
-          println(f"[profile] codec-scale $label rows=$n ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        }
-        // committed first (warm pays codegen), then scaled
-        Seq(1, 2).foreach { round =>
-          time(s"image_decode_1x r$round",
-            () => operators.Multimodal.imageDecode(spark, operators.Multimodal.imagesDir))
-          time(s"image_decode_big r$round", () => operators.Multimodal.imageDecode(spark, imgBig))
-          time(s"audio_decode_1x r$round",
-            () => operators.Multimodal.audioDecode(spark, operators.Multimodal.audioDir))
-          time(s"audio_decode_big r$round", () => operators.Multimodal.audioDecode(spark, audBig))
-          time(s"frame_sample_1x r$round",
-            () => operators.Multimodal.frameSample(spark, operators.Multimodal.audioDir))
-          time(s"frame_sample_big r$round", () => operators.Multimodal.frameSample(spark, audBig))
-        }
-      case "--basket-stages" =>
-        // q45 cost split: basket formation (groupBy + collect_set)
-        // vs the HOF pair expansion + support agg on top of it.
-        // Higher-order functions evaluate interpreted (no codegen), so
-        // if the expansion dominates, a native kernel is the lever.
-        import org.apache.spark.sql.functions.{col => c, _}
-        def time(label: String)(f: => Long): Unit = {
-          val t0 = System.nanoTime(); val n = f
-          println(f"[profile] basket-stages $label%-12s ${(System.nanoTime() - t0) / 1e9}%6.2f s rows=$n")
-        }
-        (1 to 2).foreach { r =>
-          time(s"baskets r$r") {
-            sources.Tables.lineitem(spark, d)
-              .select(c("l_orderkey"), c("l_partkey"))
-              .groupBy(c("l_orderkey"))
-              .agg(sort_array(collect_set(c("l_partkey"))).as("parts")).count()
-          }
-          time(s"full r$r") {
-            SparkEntry.queries("q45_basket_pairs")(spark, d).count()
-          }
-        }
-      case "--ingest-scale" =>
-        // classification cost at file-count scale: <sfDir> is a
-        // statements root (tools/gen_statements.py <dir> <n_dates>).
-        // The round-17 claim under measurement: the 23-platform matrix
-        // compiles to a map-only when-chain, so ingest runs at scan
-        // speed with ZERO hash exchanges before the presentation sort —
-        // the old rules-join + priority window shuffled every file.
-        val df = operators.FundEtl.ingestFrom(spark, d)
-        val nEx = "Exchange hashpartitioning".r
-          .findAllIn(df.queryExecution.executedPlan.toString).size
-        (1 to 2).foreach { r =>
-          val t0 = System.nanoTime()
-          val n = df.count()
-          println(f"[profile] ingest-scale r$r files=$n " +
-            f"${(System.nanoTime() - t0) / 1e9}%.2f s hash_exchanges=$nEx")
-        }
-      case "--stream-flagship" =>
-        // per-batch cost of the streaming flagship (statementPipeline)
-        // as its maintained indexes GROW: <sfDir> is a statements root
-        // of dated folders (tools/gen_statements.py <dir> <n_dates>);
-        // the dates are applied in ~10 equal batch groups through the
-        // same foreachBatch body the stream runs. The claim under
-        // measurement: per-batch cost tracks the BATCH (probe work =
-        // batch×bands + batch×nprobe), not the accumulated corpus —
-        // a flat curve here is what makes the firehose consumable.
-        val dates = new java.io.File(d).list().filter(_.matches("[0-9]{8}")).sorted
-        require(dates.nonEmpty, s"no dated folders under $d")
-        val groups = dates.grouped(math.max(1, dates.length / 10)).toSeq
-        val ddTbl = "profile_flagship_band_index"
-        val annTbl = "profile_flagship_ivf_index"
-        Seq(ddTbl, annTbl).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-        val work = java.nio.file.Files.createTempDirectory("graft_flagship_prof").toString
-        val cents = operators.FundEtl
-          .loadStatements(spark, "*.txt", s"$d/${dates.head}")
-          .select(col("file_name"),
-            functions.VectorFunctions.hashedTextEmbedding(col("content"))
-              .as("embedding"))
-          .orderBy(col("file_name")).limit(16)
-          .collect().zipWithIndex
-          .map { case (r, i) => (i.toLong, r.getSeq[Float](1)) }.toSeq
-        groups.zipWithIndex.foreach { case (g, i) =>
-          val batch = operators.FundEtl.loadStatements(spark, "*.txt",
-            g.map(dt => s"$d/$dt"): _*)
-          val t0 = System.nanoTime()
-          streaming.EventStreams.statementPipelineApplyBatch(batch, i.toLong,
-            s"$work/extracted", ddTbl, s"$work/pairs", cents, annTbl,
-            s"$work/topk", 2, 3)
-          val secs = (System.nanoTime() - t0) / 1e9
-          val idxRows = spark.table(ddTbl).count() + spark.table(annTbl).count()
-          println(f"[profile] stream-flagship batch=$i dates=${g.length} " +
-            f"$secs%.2f s index_rows=$idxRows")
-        }
-        Seq(ddTbl, annTbl).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-      case "--ann-k-sweep" =>
-        // the adaptive-k bound, measured: with fixed k=16 every list
-        // holds n/16 vectors, so the batch probe is ~n²/80 cosines and
-        // the curve explodes (0.45s → 12.4s at 25× last round); with
-        // k = annK(n) list occupancy stays ~64 and per-batch probe
-        // work is ~flat. Fixed-k is skipped past the size where its
-        // quadratic stops being a measurement and starts being a
-        // stress test.
-        val n = spark.read.parquet(s"$d/embeddings.parquet").count()
-        val k = operators.Similarity.annK(n)
-        def timeQ(name: String): Double = {
-          val t0 = System.nanoTime()
-          SparkEntry.queries(name)(spark, d).count()
-          (System.nanoTime() - t0) / 1e9
-        }
-        val ta = timeQ("ann_incremental_adaptive")
-        val tf = if (n <= 60000) f"${timeQ("ann_incremental")}%.2f s" else "skipped"
-        println(f"[profile] ann-k-sweep n=$n k=$k adaptive=$ta%.2f s fixed16=$tf")
-      case "--rfm-stages" =>
-        // per-stage cost split of q46_rfm_segment (round 18): where
-        // does the restructured op's fixed cost sit at a test SF —
-        // aggregate materialization, the exactRankPairs selection, or
-        // the scoring aggregate? (The registered op re-runs everything
-        // fresh after a clearCache, so `total` is the honest op time
-        // and `score ≈ total − materialize − selection`.)
-        def tstage[A](label: String)(f: => A): A = {
-          val t0 = System.nanoTime(); val r = f
-          println(f"[profile] rfm-stage $label%-14s ${(System.nanoTime() - t0) / 1e9}%6.2f s")
-          r
-        }
-        val rfmAgg = operators.Relational.rfmAggregate(spark, d).persist()
-        tstage("materialize")(rfmAgg.count())
-        val rfmDims = Seq("recency_days", "frequency", "monetary_e2")
-        tstage("selection") {
-          operators.Relational.exactRankPairs(rfmAgg, "o_custkey", rfmDims, { n =>
-            if (n == 0) Seq.empty
-            else {
-              val base = n / 4; val rem = n % 4
-              val bounds = (1L to 3L).map(i => i * base + math.min(i, rem))
-              rfmDims.flatMap(v => bounds.map(v -> _))
-            }
-          })
-        }
-        spark.sharedState.cacheManager.clearCache()
-        tstage("total")(SparkEntry.queries("q46_rfm_segment")(spark, d).count())
-        spark.sharedState.cacheManager.clearCache()
-      case "--walk-stages" =>
-        // per-stage cost split of BOTH graph-walk ops (round 18 — the
-        // finer probe superseding round 17's adaptive-only split; see
-        // Similarity.walkStageProbe: noop-sink timings for store/
-        // assignment, kNN graph checkpoint, entry lookup, the greedy
-        // descent loop, and the emit sort)
-        operators.Similarity.walkStageProbe(spark, d)
-      case "--ann-occupancy" =>
-        // fine-list occupancy census of the adaptive quantizer — the
-        // scale driver of ann_graph_walk_adaptive's within-list build
-        // (Σ|list|² cosines) and the direct measure of the round-16
-        // make_scale duplication artifact: bit-identical scaled copies
-        // collapsed 12.5k fine lists to base-count cells of occupancy
-        // = copies (Σ|list|² inflated ~6×); the signed-permutation
-        // jitter should spread lists back to ~n/k occupancy.
-        val embT = sources.Tables.embeddings(spark, d)
-        val n = embT.count()
-        val k = operators.Similarity.annK(n)
-        val occ = operators.Similarity.fineOccupancy(spark, embT, k)
-          .agg(org.apache.spark.sql.functions.count("*").as("lists"),
-            org.apache.spark.sql.functions.max("occ").as("max_occ"),
-            org.apache.spark.sql.functions.avg("occ").as("mean_occ"),
-            org.apache.spark.sql.functions.sum(
-              org.apache.spark.sql.functions.expr("occ * occ")).as("sum_sq"))
-          .collect()(0)
-        println(f"[profile] ann-occupancy n=$n k=$k " +
-          f"lists=${occ.getLong(0)} max=${occ.getLong(1)} " +
-          f"mean=${occ.getDouble(2)}%.1f sum_sq=${occ.getLong(3)}")
-      case "--decontam-crossover" =>
-        // exact join vs bloom-gated at growing eval-set sizes, with NO
-        // broadcast hint — the planner shifts broadcast → shuffle as
-        // the eval side outgrows the threshold, and the sweep locates
-        // the crossover where the map-only gate starts winning
-        Seq(20L, 500L, 5000L, 20000L).foreach { b =>
-          def time(useBloom: Boolean): (Double, Long) = {
-            val t0 = System.nanoTime()
-            val rows = operators.TextAnalysis.decontamMeasure(spark, d, b, useBloom).count()
-            ((System.nanoTime() - t0) / 1e9, rows)
-          }
-          val (te, re) = time(false)
-          spark.catalog.clearCache()
-          val (tb, rb) = time(true)
-          spark.catalog.clearCache()
-          println(f"[profile] decontam-crossover bench=$b exact=$te%.2f s " +
-            f"bloom=$tb%.2f s rows=$re/$rb")
-          require(re == rb, s"bloom gate changed the output at bench=$b")
-        }
-      case "--mm-pipeline" =>
-        // the composed curation DAG over the committed corpus vs a
-        // factor-scaled generated one (tools/gen_images.py <dst>
-        // <factor>; dir via env) — the claim: cost tracks the decode
-        // pass (file count), the pair join stays bucket-bounded, and
-        // clustering rides the size-routed CC kernel
-        val imgBig = sys.env.getOrElse("SPARK_GRAFT_IMAGES_DIR", "/tmp/images10x")
-        Seq(1, 2).foreach { round =>
-          Seq("1x" -> operators.Multimodal.imagesDir, "big" -> imgBig).foreach {
-            case (lbl, dir) =>
-              val t0 = System.nanoTime()
-              val out = operators.Multimodal.imagePipeline(spark, dir)
-              val n = out.count()
-              val kept = out.filter(col("is_canonical")).count()
-              println(f"[profile] mm-pipeline $lbl r$round files=$n kept=$kept " +
-                f"${(System.nanoTime() - t0) / 1e9}%.2f s")
-          }
-        }
-      case "--avro-scale" =>
-        // container-count amortization for the Avro source: the 1×
-        // committed corpus vs a factor-scaled generated dir (tools/
-        // gen_avro.py <dst> <factor>; dir via env). Far-sublinear
-        // growth in file count = the binaryFile listing + per-partition
-        // decode amortize, the same claim the image/audio codecs carry.
-        val big = sys.env.getOrElse("SPARK_GRAFT_AVRO_DIR", "/tmp/avro20x")
-        Seq(1, 2).foreach { round =>
-          Seq("1x" -> sources.Avro.avroDir, "big" -> big).foreach { case (lbl, dir) =>
-            val t0 = System.nanoTime()
-            val n = sources.Avro.navIngest(spark, dir).count()
-            println(f"[profile] avro-scale $lbl r$round files=$n ${(System.nanoTime() - t0) / 1e9}%.2f s")
-          }
-        }
-      case "--simhash-legs" =>
-        // stage split of the two-leg simhash pair emission: groups
-        // build, map-side eq expansion, distinct-value band join,
-        // group fan-out, full operator
-        val sigs = operators.Dedup.simhashStore(spark, d)
-        val t0 = System.nanoTime()
-        val nSig = sigs.count()
-        val t1 = System.nanoTime()
-        // groups materializes HERE (simhashGroups localCheckpoints
-        // eagerly), so its interval is real, not folded into eq's
-        val groups = operators.Dedup.simhashGroups(sigs)
-        val t2 = System.nanoTime()
-        val eq = operators.Dedup.simhashEqPairs(groups).count()
-        val t3 = System.nanoTime()
-        val vp = operators.Dedup.simhashValuePairs(groups).count()
-        val t4 = System.nanoTime()
-        val cross = operators.Dedup.simhashCrossPairs(groups).count()
-        val t5 = System.nanoTime()
-        val full = SparkEntry.queries("dd_simhash")(spark, d).count()
-        val t6 = System.nanoTime()
-        println(f"[profile] simhash-legs sigs=$nSig (${(t1 - t0) / 1e9}%.2f s) " +
-          f"groups (${(t2 - t1) / 1e9}%.2f s) " +
-          f"eq=$eq (${(t3 - t2) / 1e9}%.2f s) " +
-          f"vpairs=$vp (${(t4 - t3) / 1e9}%.2f s) " +
-          f"cross=$cross (${(t5 - t4) / 1e9}%.2f s) " +
-          f"full=$full (${(t6 - t5) / 1e9}%.2f s)")
-      case "--cc-floor" =>
-        // The r13 verdict's CC-floor experiment: dd_cluster/dd_canonical
-        // are the dedup family's 100× tail (~70 s each), dominated by
-        // alternating large-star/small-star rounds over the 27.3M-edge
-        // clique-dense pair graph. A/B: the routed star path vs the
-        // driver union-find with its edge budget raised past the graph
-        // (the verdict's suggested lever — Tuple2 of longs specializes
-        // to raw fields, so 27M edges collect to ~1 GB transient).
-        // Labels must agree exactly; driver heap delta is printed so
-        // the budget decision is a measured number, not a guess.
-        val pairs = operators.Dedup.minhashPairs(spark, d)
-          .select(org.apache.spark.sql.functions.col("doc_a"),
-            org.apache.spark.sql.functions.col("doc_b"))
-          .localCheckpoint()
-        val nEdges = pairs.count()
-        def heapMB: Long = {
-          System.gc()
-          val r = Runtime.getRuntime
-          (r.totalMemory() - r.freeMemory()) / (1024 * 1024)
-        }
-        Seq(1, 2).foreach { round =>
-          val t0 = System.nanoTime()
-          // budget 0 FORCES the distributed star path (the default was
-          // raised to 64M off this very experiment, so relying on it
-          // would compare union-find against union-find)
-          val star = operators.Dedup.connectedComponents(pairs,
-            driverPathMaxEdges = 0L, materialized = true)
-            .localCheckpoint()
-          val nStar = star.count()
-          val t1 = System.nanoTime()
-          val h0 = heapMB
-          val t2 = System.nanoTime()
-          val uf = operators.Dedup.connectedComponents(pairs,
-            driverPathMaxEdges = 128000000L, materialized = true)
-            .localCheckpoint()
-          val nUf = uf.count()
-          val t3 = System.nanoTime()
-          val h1 = heapMB
-          val diff = star.as("a").join(uf.as("b"),
-            org.apache.spark.sql.functions.col("a.node") ===
-              org.apache.spark.sql.functions.col("b.node") &&
-            org.apache.spark.sql.functions.col("a.label") =!=
-              org.apache.spark.sql.functions.col("b.label")).count()
-          println(f"[profile] cc-floor r$round edges=$nEdges " +
-            f"star=$nStar (${(t1 - t0) / 1e9}%.2f s) " +
-            f"uf=$nUf (${(t3 - t2) / 1e9}%.2f s, heap $h0%d->$h1%d MB) " +
-            f"label_diff=$diff")
-        }
-      case "--rank-floor" =>
-        // The rank sibling of --cc-floor: the integer PageRank kernel
-        // has the same two routes (driver replay vs distributed
-        // iteration, bit-identical by spec), same 1M-directed-edge
-        // budget, and the same question at 100× — does the per-round
-        // multi-job overhead dominate past the old budget? A/B over
-        // the 27.3M-pair graph with score equality asserted.
-        val pairs = operators.Dedup.minhashPairs(spark, d)
-          .select(org.apache.spark.sql.functions.col("doc_a"),
-            org.apache.spark.sql.functions.col("doc_b"))
-          .localCheckpoint()
-        val nPairs = pairs.count()
-        val nodeIds = sources.Tables.documents(spark, d)
-          .select(org.apache.spark.sql.functions.col("doc_id"))
-        def heapMB: Long = {
-          System.gc()
-          val r = Runtime.getRuntime
-          (r.totalMemory() - r.freeMemory()) / (1024 * 1024)
-        }
-        Seq(1, 2).foreach { round =>
-          val t0 = System.nanoTime()
-          val dist = operators.Dedup.graphRankScores(nodeIds, pairs,
-            driverPathMaxEdges = 0L).localCheckpoint()
-          val nDist = dist.count()
-          val t1 = System.nanoTime()
-          val h0 = heapMB
-          val t2 = System.nanoTime()
-          val drv = operators.Dedup.graphRankScores(nodeIds, pairs,
-            driverPathMaxEdges = 128000000L).localCheckpoint()
-          val nDrv = drv.count()
-          val t3 = System.nanoTime()
-          val h1 = heapMB
-          val diff = dist.as("a").join(drv.as("b"),
-            org.apache.spark.sql.functions.col("a.doc_id") ===
-              org.apache.spark.sql.functions.col("b.doc_id") &&
-            (org.apache.spark.sql.functions.col("a.score_e9") =!=
-              org.apache.spark.sql.functions.col("b.score_e9") ||
-             org.apache.spark.sql.functions.col("a.deg") =!=
-              org.apache.spark.sql.functions.col("b.deg"))).count()
-          println(f"[profile] rank-floor r$round pairs=$nPairs " +
-            f"dist=$nDist (${(t1 - t0) / 1e9}%.2f s) " +
-            f"driver=$nDrv (${(t3 - t2) / 1e9}%.2f s, heap $h0%d->$h1%d MB) " +
-            f"score_diff=$diff")
-        }
-      case "--stmt-probe" =>
-        // end-to-end timing of one cold statement batch (exactly
-        // Bench.timeStatementBatch's construction: fresh tables + temp
-        // dirs per call so every run pays the full per-batch cost) —
-        // the A/B harness for changes to statementPipelineApplyBatch.
-        val fe = operators.FundEtl
-        val docs = fe.loadStatements(spark, fe.statementsDir)
-        val seedNames = docs.select(col("file_name"))
-          .orderBy(col("file_name")).limit(4).collect().map(_.getString(0)).toSeq
-        val cents: Seq[(Long, Seq[Float])] = docs
-          .filter(col("file_name").isin(seedNames: _*))
-          .select(org.apache.spark.sql.functions.xxhash64(col("file_name")).as("id"),
-            functions.VectorFunctions.hashedTextEmbedding(col("content"))
-              .as("embedding"))
-          .collect().map(r => (r.getLong(0), r.getSeq[Float](1))).sortBy(_._1).toSeq
-        val tmp = java.nio.file.Files.createTempDirectory("graft-stmt-probe").toString
-        val tag = java.lang.Long.toHexString(System.nanoTime())
-        val (ddTbl, annTbl) = (s"profile_probe_dd_$tag", s"profile_probe_ann_$tag")
-        try {
-          val t0 = System.nanoTime()
-          streaming.EventStreams.statementPipelineApplyBatch(
-            docs, 0L, s"$tmp/extracted", ddTbl, s"$tmp/pairs", cents,
-            annTbl, s"$tmp/topk", 2, 3)
-          println(f"[profile] stmt-probe ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        } finally {
-          Seq(ddTbl, annTbl).foreach(t =>
-            try spark.sql(s"DROP TABLE IF EXISTS $t") catch { case _: Throwable => () })
-          try {
-            import scala.jdk.CollectionConverters._
-            val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(tmp))
-            try walk.iterator().asScala.toSeq.reverse
-              .foreach(java.nio.file.Files.deleteIfExists(_))
-            finally walk.close()
-          } catch { case _: Throwable => () }
-        }
-      case "--stmt-stages" =>
-        // per-stage cost split of the statement flagship's batch probe
-        // (Bench.timeStatementBatch's construction, with the three
-        // stages of statementPipelineApplyBatch timed separately):
-        // extract checkpoint / manifest write / dedup-index batch /
-        // ann-index batch. Decides whether the stages are worth
-        // overlapping (guide §2.6) or one of them dominates.
-        val fe = operators.FundEtl
-        val docs = fe.loadStatements(spark, fe.statementsDir)
-        val seedNames = docs.select(col("file_name"))
-          .orderBy(col("file_name")).limit(4).collect().map(_.getString(0)).toSeq
-        val cents: Seq[(Long, Seq[Float])] = docs
-          .filter(col("file_name").isin(seedNames: _*))
-          .select(org.apache.spark.sql.functions.xxhash64(col("file_name")).as("id"),
-            functions.VectorFunctions.hashedTextEmbedding(col("content"))
-              .as("embedding"))
-          .collect().map(r => (r.getLong(0), r.getSeq[Float](1))).sortBy(_._1).toSeq
-        val tmp = java.nio.file.Files.createTempDirectory("graft-stmt-prof").toString
-        val tag = java.lang.Long.toHexString(System.nanoTime())
-        val (ddTbl, annTbl) = (s"profile_stmt_dd_$tag", s"profile_stmt_ann_$tag")
-        try {
-          var t0 = System.nanoTime()
-          val extracted = fe.extractStatementFields(spark,
-              fe.classifyStatements(spark, docs), extra = Seq("content"))
-            .withColumn("doc_id",
-              org.apache.spark.sql.functions.xxhash64(col("file_name")))
-            .localCheckpoint()
-          println(f"[profile] stmt-stages extract  ${(System.nanoTime() - t0) / 1e9}%.2f s")
-          t0 = System.nanoTime()
-          extracted.drop("content", "doc_id")
-            .write.mode("overwrite").parquet(s"$tmp/extracted/batch-0")
-          println(f"[profile] stmt-stages manifest ${(System.nanoTime() - t0) / 1e9}%.2f s")
-          t0 = System.nanoTime()
-          streaming.EventStreams.dedupIndexApplyBatch(
-            extracted.select(col("doc_id"), col("content").as("text")),
-            0L, ddTbl, s"$tmp/pairs")
-          println(f"[profile] stmt-stages dedup    ${(System.nanoTime() - t0) / 1e9}%.2f s")
-          t0 = System.nanoTime()
-          streaming.EventStreams.annIndexApplyBatch(
-            extracted.select(col("doc_id").as("vec_id"),
-              functions.VectorFunctions
-                .hashedTextEmbedding(col("content")).as("embedding")),
-            0L, cents, annTbl, s"$tmp/topk", 2, 3, 8)
-          println(f"[profile] stmt-stages ann      ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        } finally {
-          Seq(ddTbl, annTbl).foreach(t =>
-            try spark.sql(s"DROP TABLE IF EXISTS $t") catch { case _: Throwable => () })
-          try {
-            import scala.jdk.CollectionConverters._
-            val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(tmp))
-            try walk.iterator().asScala.toSeq.reverse
-              .foreach(java.nio.file.Files.deleteIfExists(_))
-            finally walk.close()
-          } catch { case _: Throwable => () }
-        }
-      case "--curation-stages" =>
-        // per-batch cost split of tx_curation_incremental: the op is 3
-        // sequential curationApplyBatch calls against a keeper table +
-        // cursor sidecar, then one manifest re-read. Times each call so
-        // the fixed per-batch overhead (writes, table append, collects)
-        // is visible separately from the final assembly.
-        import org.apache.spark.sql.functions.{col => c}
-        val docs = sources.Tables.documents(spark, d)
-          .select(c("doc_id"), c("source"), c("text"))
-        val bounds = docs.agg(
-          org.apache.spark.sql.functions.min(c("doc_id")),
-          org.apache.spark.sql.functions.max(c("doc_id"))).head()
-        // empty documents table: nothing to split — say so, don't NPE
-        require(!bounds.isNullAt(0), "--curation-stages: documents table is empty")
-        val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-        val (cut1, cut2) = (lo + (hi - lo) / 3, lo + 2 * (hi - lo) / 3)
-        val tag = java.lang.Long.toHexString(System.nanoTime())
-        val keeperTbl = s"profile_curation_keeper_$tag"
-        val tmp = java.nio.file.Files.createTempDirectory("graft-cur-prof").toString
-        // table + temp dir must not leak when a batch throws mid-loop
-        try {
-          val batches = Seq(
-            docs.filter(c("doc_id") <= cut1),
-            docs.filter(c("doc_id") > cut1 && c("doc_id") <= cut2),
-            docs.filter(c("doc_id") > cut2))
-          batches.zipWithIndex.foreach { case (b, i) =>
-            val t0 = System.nanoTime()
-            streaming.EventStreams.curationApplyBatch(
-              b, i.toLong, keeperTbl, s"$tmp/cursor", s"$tmp/out")
-            println(f"[profile] curation-stages batch=$i ${(System.nanoTime() - t0) / 1e9}%.2f s")
-          }
-          val t0 = System.nanoTime()
-          val n = spark.read.option("recursiveFileLookup", "true")
-            .parquet(s"$tmp/out").orderBy(c("doc_id")).localCheckpoint().count()
-          println(f"[profile] curation-stages assemble ${(System.nanoTime() - t0) / 1e9}%.2f s rows=$n")
-        } finally {
-          try spark.sql(s"DROP TABLE IF EXISTS $keeperTbl")
-          catch { case _: Throwable => () }
-          try {
-            import scala.jdk.CollectionConverters._
-            val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(tmp))
-            try walk.iterator().asScala.toSeq.reverse
-              .foreach(java.nio.file.Files.deleteIfExists(_))
-            finally walk.close() // the stream holds a directory handle
-          } catch { case _: Throwable => () }
-        }
-      case "--explain-skyline-dist" =>
-        // the q52 refine's DISTRIBUTED route (driverMax = 0 forces the
-        // two-pass prefix scan the 100 TB staircase takes) — committed
-        // as plan evidence since the registered op size-routes to the
-        // driver refine at every test SF
-        val agg = sources.Tables.lineitem(spark, d)
-          .groupBy(col("l_partkey").as("id"))
-          .agg(org.apache.spark.sql.functions.expr(
-            "CAST(min(floor(l_extendedprice * 100 + 0.5)) AS BIGINT)").as("cost_c"),
-            org.apache.spark.sql.functions.expr(
-              "CAST(floor(sum(l_quantity) + 0.5) AS BIGINT)").as("qty_l"))
-          .localCheckpoint()
-        val q = operators.Relational.skyline(agg, driverMax = 0L)
-        q.queryExecution.toRdd.count()
-        println(s"[profile] plan for q52_skyline (distributed refine route):\n" +
-          q.queryExecution.executedPlan.toString)
-      case n if n.startsWith("explain:") =>
-        // dump the EXECUTED physical plan (post-AQE) for one query
-        val q = SparkEntry.queries(n.stripPrefix("explain:"))(spark, d)
-        q.queryExecution.toRdd.count()
-        println(s"[profile] plan for ${n.stripPrefix("explain:")}:\n" +
-          q.queryExecution.executedPlan.toString)
-      case n =>
-        val t0 = System.nanoTime()
-        val rows = SparkEntry.queries(n)(spark, d).count()
-        println(f"[profile] $n%-26s ${(System.nanoTime() - t0) / 1e9}%8.2f s  rows=$rows")
-        // MEASUREMENT FIX (round 18): drop the op's persisted
-        // intermediates, exactly like Bench does between samples.
-        // Without this, a repeat timing of any self-persisting op
-        // (q22/q37 persist their RESULT for Verify's double
-        // materialization) reads the CacheManager's copy of the
-        // previous run — the r17 "q22/q37 profile ~0.15 s warm vs
-        // ~1.0 s in-sweep" mystery was exactly this phantom: the warm
-        // number measured a 3-row cache read, not the query.
-        spark.catalog.clearCache()
+    val recorder = new Recorder
+    spark.sparkContext.addSparkListener(recorder)
+    try {
+      spark.range(1).count()
+      for (name <- names; run <- 1 to 2)
+        println(toJson(profile(spark, recorder, args(0), name, run)))
+    } finally {
+      spark.sparkContext.removeSparkListener(recorder)
+      spark.stop()
     }
-    spark.stop()
+  }
+
+  /** One run of `name`; `recorder` must be listening on `spark`. */
+  private[graft] def profile(spark: SparkSession, recorder: Recorder, d: String,
+      name: String, run: Int): Run = {
+    val sc = spark.sparkContext
+    /** The body's outcome, its phase, and the phase's last executed plan. */
+    def phase[A](kind: String)(body: => A): (Try[A], Phase, Option[SparkPlan]) = {
+      val group = s"$groupPrefix$name-$run-$kind"
+      // no description: the group's own jobs are labelled by call site
+      sc.setJobGroup(group, null)
+      val t0 = System.nanoTime()
+      val out = try Try(body) finally sc.clearJobGroup()
+      val ms = (System.nanoTime() - t0) / 1000000
+      Bridge.waitUntilEmpty(sc)
+      val (groups, plan) = recorder.take(group)
+      (out, Phase(ms, groups), plan)
+    }
+    def error(t: Try[_]): Option[String] = t.failed.toOption.map(_.toString)
+    try {
+      if (name == statementProbe) {
+        val probe = new StatementBatchProbe(spark)
+        try {
+          val (done, build, _) = phase("build")(probe.run())
+          Run(name, run, build, None, None, None, error(done))
+        } finally probe.close()
+      } else {
+        val fn = SparkEntry.queries.getOrElse(name,
+          throw new IllegalArgumentException(s"unknown op: $name"))
+        phase("build")(fn(spark, d)) match {
+          case (Failure(e), build, _) => Run(name, run, build, None, None, None, Some(e.toString))
+          case (Success(df), build, _) =>
+            val (done, action, plan) =
+              phase("action")(df.write.format("noop").mode("overwrite").save())
+            Run(name, run, build, Some(action), plan.map(exchanges),
+              plan.map(_.toString), error(done))
+        }
+      }
+    } finally spark.catalog.clearCache()
+  }
+
+  /** Shuffle and broadcast exchanges of a final plan; a reused exchange
+    * is not a new one.
+    */
+  private def exchanges(p: SparkPlan): Int = p match {
+    case a: AdaptiveSparkPlanExec => exchanges(a.executedPlan)
+    case s: QueryStageExec => exchanges(s.plan)
+    case e: Exchange => 1 + e.children.map(exchanges).sum
+    case _ => p.children.map(exchanges).sum
+  }
+
+  /** The one listener: job, stage and task totals per (job group,
+    * label) of the profile's phases, and the executed plan of each
+    * group's last finished SQL execution. Callbacks run on the listener
+    * bus thread; readers drain the bus first and synchronise with it.
+    */
+  private[graft] final class Recorder extends SparkListener {
+    private final class Acc {
+      var jobs, stages = 0
+      var tasks, runMs, cpuNs, read, written, spill, result = 0L
+      val spans = mutable.ArrayBuffer.empty[(Long, Long)]
+    }
+    private type Key = (String, String)
+    private val accs = mutable.LinkedHashMap.empty[Key, Acc]
+    private val openJobs = mutable.Map.empty[Int, (Key, Long)]
+    private val stageKey = mutable.Map.empty[Int, Key]
+    /** Job group and description of each running SQL execution. */
+    private val execs = mutable.Map.empty[Long, (String, String)]
+    private val plans = mutable.Map.empty[String, SparkPlan]
+
+    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+      def prop(k: String) = Option(e.properties).flatMap(p => Option(p.getProperty(k)))
+      prop("spark.jobGroup.id").filter(_.startsWith(groupPrefix)).foreach { g =>
+        // the job's description, else its SQL execution's (which falls
+        // back to the site that started the execution: jobs AQE submits
+        // from its own threads have no useful call site of their own),
+        // else the job's call site, which names its last stage
+        val label = prop("spark.job.description")
+          .orElse(prop("spark.sql.execution.id").flatMap(_.toLongOption)
+            .flatMap(execs.get).map(_._2))
+          .orElse(prop("callSite.short"))
+          .orElse(e.stageInfos.sortBy(_.stageId).lastOption.map(_.name)).getOrElse("")
+        val key = (g, label)
+        accs.getOrElseUpdate(key, new Acc).jobs += 1
+        openJobs(e.jobId) = (key, e.time)
+        e.stageIds.foreach(stageKey.getOrElseUpdate(_, key))
+      }
+    }
+
+    override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
+      openJobs.remove(e.jobId).foreach { case (key, start) =>
+        accs.get(key).foreach(_.spans += ((start, e.time)))
+      }
+    }
+
+    private def acc(stageId: Int): Option[Acc] = stageKey.get(stageId).flatMap(accs.get)
+
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = synchronized {
+      acc(e.stageInfo.stageId).foreach(_.stages += 1)
+    }
+
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
+      for (a <- acc(e.stageId); m <- Option(e.taskMetrics)) {
+        a.tasks += 1
+        a.runMs += m.executorRunTime
+        a.cpuNs += m.executorCpuTime
+        a.read += m.shuffleReadMetrics.totalBytesRead
+        a.written += m.shuffleWriteMetrics.bytesWritten
+        a.spill += m.memoryBytesSpilled + m.diskBytesSpilled
+        a.result += m.resultSize
+      }
+    }
+
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case start: SparkListenerSQLExecutionStart => synchronized {
+        start.jobGroupId.filter(_.startsWith(groupPrefix))
+          .foreach(g => execs(start.executionId) = (g, start.description))
+      }
+      case end: SparkListenerSQLExecutionEnd => synchronized {
+        for ((g, _) <- execs.remove(end.executionId); qe <- Option(Bridge.queryExecution(end)))
+          plans(g) = qe.executedPlan
+      }
+      case _ => ()
+    }
+
+    /** Takes what was recorded under job group `group`: its label
+      * groups, and the executed plan of its last finished SQL execution.
+      */
+    def take(group: String): (Seq[Group], Option[SparkPlan]) = synchronized {
+      val mine = accs.filter(_._1._1 == group).toSeq
+      mine.foreach(kv => accs.remove(kv._1))
+      stageKey.filterInPlace((_, k) => k._1 != group)
+      (mine.map { case ((_, label), a) =>
+        Group(label, a.jobs, a.stages, a.tasks, covered(a.spans.toSeq), a.runMs,
+          a.cpuNs / 1000000, a.read, a.written, a.spill, a.result)
+      }, plans.remove(group))
+    }
+  }
+
+  /** Length of the union of the intervals. */
+  private def covered(intervals: Seq[(Long, Long)]): Long = {
+    var total = 0L
+    var cur = Long.MinValue
+    intervals.sortBy(_._1).foreach { case (a, b) =>
+      val from = math.max(a, cur)
+      if (b > from) { total += b - from; cur = b }
+    }
+    total
   }
 }

@@ -339,9 +339,10 @@ object Dedup {
       .filter(col("est_jaccard") >= 0.5)
   }
 
-  /** The banded signature table alone — Profile --lsh-skew reads the
-    * band-bucket size distribution off it (Σ bucket² is the join's
-    * real cost; no AQE split changes that, only the parallelism).
+  /** The banded signature table alone — the LSH-geometry op and the
+    * skew spec read the band-bucket size distribution off it (Σ bucket²
+    * is the join's real cost; no AQE split changes that, only the
+    * parallelism).
     * Reads the store — the diagnostic prices the rows the join
     * actually banded against, never a second recompute.
     */
@@ -1276,7 +1277,7 @@ object Dedup {
     * materialized (simhash, ids) table.
     */
   /** The pair-band join over distinct values alone — the candidate
-    * stage of leg 2, exposed for the Profile stage split. Band keys
+    * stage of leg 2. Band keys
     * are the 15 C(6,2) chunk pairs of
     * [[graft.functions.FirstMatchingChunk]] (21-22 composite bits per
     * key), generated by one CASE over the exploded band index.
@@ -1644,8 +1645,7 @@ object Dedup {
     * property that holds at 100 TB, where a near-dup graph can hide
     * million-hop chains. The pointer-jumping fixpoint remains as
     * [[connectedComponentsPointerJump]] (spec-equal on chain / cycle /
-    * corpus graphs; head-to-head re-measurable via Profile
-    * --cc-compare).
+    * corpus graphs).
     *
     * BUDGET (round 14 — the verdict's CC-floor experiment, measured
     * via Profile --cc-floor): raised 1M → 64M directed edges. On the
@@ -1719,8 +1719,7 @@ object Dedup {
   /** Min-label propagation with POINTER JUMPING — the classic
     * alternative distributed CC fixpoint, kept first-class for
     * cross-checking the star path (spec-equal on chain / cycle /
-    * corpus graphs) and for head-to-head measurement (Profile
-    * --cc-compare). Each round first lowers every node's label to the
+    * corpus graphs). Each round first lowers every node's label to the
     * min over itself and its neighbors (one edge of travel), then
     * rewrites label ← label(label) — label chains halve per round, so
     * the fixpoint lands in O(log diameter) rounds rather than
@@ -1834,8 +1833,8 @@ object Dedup {
     // (persist or localCheckpoint) — edge canonicalization and node
     // extraction both read it, and a live plan re-executes its entire
     // upstream (band join and all) for the second consumer, measured
-    // 1.5s → 2.6s on the corpus graph. The router, the dd_cluster_star
-    // operator and both Profile harnesses pass materialized input;
+    // 1.5s → 2.6s on the corpus graph. The router and the
+    // dd_cluster_star operator pass materialized input;
     // spec callers pass literal in-memory graphs, where re-reading is
     // free. No barrier here: it would re-copy a graph that at 100× is
     // 27M rows (measured as tens of seconds of pure duplication).
@@ -1915,7 +1914,7 @@ object Dedup {
       val (observed, sig) = edgeSig(smallStar(largeStar(edges)))
       edges = observed.localCheckpoint()
       val cur = sig()
-      // per-round edge telemetry (spec/Profile only): THE property that
+      // per-round edge telemetry (spec only): THE property that
       // makes this algorithm the billion-edge route is that the edge
       // set CONTRACTS as components collapse — unlike pointer jumping,
       // whose per-round shuffle never shrinks. The count now reads off
@@ -1990,28 +1989,12 @@ object Dedup {
     * Σ_probe df(rarest) — small by construction, since probes are the
     * rare shingles. Only surviving candidates pay the exact
     * intersect/verify against the full shingle sets.
-    */
-  /** The prefix-filter candidate stage of [[ddContainment]], exposed
-    * so the candidate-volume curve can be measured directly at larger
-    * scale factors (Profile --containment-volume): candidate count is
+    *
+    * This is the prefix-filter candidate stage of [[ddContainment]],
+    * over a CALLER-persisted shingle frame — ddContainment passes the
+    * same persisted frame it verifies against, so the shingle table is
+    * materialized (and held in memory) exactly once. Candidate count is
     * the quantity the df cap must keep bounded as the corpus grows.
-    */
-  private[graft] def documentsCount(s: SparkSession, d: String): Long =
-    Tables.documents(s, d).count()
-
-  /** The shingle frame the containment stages share — exposed so the
-    * Profile stage-split diagnostic can manage the persist lifecycle
-    * itself (the old one-arg wrapper either leaked its cached frame or,
-    * when it eagerly checkpointed, broke the diagnostic's timing AND
-    * the CacheManager reuse that keeps the verify stage from re-paying
-    * the candidate join — so the lifecycle now belongs to the caller).
-    */
-  private[graft] def containmentShingles(s: SparkSession, d: String): DataFrame =
-    shingled(s, d).select(col("doc_id"), col("sh_hashes"))
-
-  /** Candidate stage over a CALLER-persisted shingle frame — ddContainment
-    * passes the same persisted frame it verifies against, so the shingle
-    * table is materialized (and held in memory) exactly once.
     */
   private[graft] def containmentCandidates(
       s: SparkSession, d: String, sh: DataFrame): DataFrame = {

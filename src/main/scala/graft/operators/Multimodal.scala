@@ -78,9 +78,7 @@ object Multimodal {
     */
   val mmFrameSample: Q = (s, _) => frameSample(s, audioDir)
 
-  /** Dir-parameterized frame-sampling pass behind [[mmFrameSample]] —
-    * Profile --codec-scale points it at a factor-scaled corpus.
-    */
+  /** Dir-parameterized frame-sampling pass behind [[mmFrameSample]]. */
   private[graft] def frameSample(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val frameSize = 128
@@ -371,9 +369,8 @@ object Multimodal {
     */
   val mmImageDecode: Q = (s, _) => imageDecode(s, imagesDir)
 
-  /** Dir-parameterized decode pass behind [[mmImageDecode]] — Profile
-    * --codec-scale points it at a factor-scaled generated corpus to
-    * measure binaryFile listing amortization.
+  /** Dir-parameterized decode pass behind [[mmImageDecode]] — the
+    * benchmark harness points it at its own generated corpus.
     */
   private[graft] def imageDecode(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -501,9 +498,8 @@ object Multimodal {
     */
   val mmPipeline: Q = (s, _) => imagePipeline(s, imagesDir)
 
-  /** Dir-parameterized pipeline behind [[mmPipeline]] — Profile
-    * --mm-pipeline points it at a factor-scaled corpus for the
-    * codec-corpus scale measurement.
+  /** Dir-parameterized pipeline behind [[mmPipeline]] — the
+    * benchmark harness points it at its own generated corpus.
     */
   private[graft] def imagePipeline(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -549,9 +545,7 @@ object Multimodal {
     */
   val mmAudioDecode: Q = (s, _) => audioDecode(s, audioDir)
 
-  /** Dir-parameterized decode pass behind [[mmAudioDecode]] — Profile
-    * --codec-scale points it at a factor-scaled corpus.
-    */
+  /** Dir-parameterized decode pass behind [[mmAudioDecode]]. */
   private[graft] def audioDecode(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     graft.sources.BinaryFiles.scan(s, "*.{wav,au}", dir)

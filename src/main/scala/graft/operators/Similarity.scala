@@ -397,8 +397,9 @@ object Similarity {
     * 4 best fine lists WITHIN its mid cell (per-level greedy — IVF
     * semantics), then scores only those lists' stored vectors:
     * per-query work is 3·k^(1/3) + 4·64 — bounded as the corpus
-    * grows, which is the whole point (Profile --ann-k-sweep measures
-    * the curves side by side).
+    * grows, which is the whole point (`Profile <sfDir>
+    * ann_incremental_adaptive ann_incremental` reports both side by
+    * side).
     */
   val annIncrementalAdaptive: Q = (s, d) =>
     topkPresent(adaptiveProbeScored(s, d,
@@ -705,17 +706,6 @@ object Similarity {
           max(struct(col("f_sim").as("s"), (-col("cent_id")).as("nc"))).as("m"))
         .select(col(idCol), col(embCol), (-col("m.nc")).as("cent_id"))
     (fine, toMid, fineAssign)
-  }
-
-  /** Fine-list occupancy census over the three-level assignment —
-    * Profile's --ann-occupancy diagnostic (the Σ|list|² term that
-    * drives the adaptive walk's within-list graph build).
-    */
-  private[graft] def fineOccupancy(s: SparkSession, emb: DataFrame,
-      k: Int): DataFrame = {
-    val (_, _, fineAssign) = threeLevelParts(s, emb, k)
-    fineAssign(emb, "vec_id", "embedding")
-      .groupBy(col("cent_id")).agg(count(lit(1)).as("occ"))
   }
 
   /** The per-query nprobe-best fine lists WITHIN the query's mid cell
@@ -1220,73 +1210,6 @@ object Similarity {
       .groupBy(col("query_id")).agg(min(col("vec_id")).as("node"))
     greedyWalk(graph, queriesDf, entry,
       assigned.select(col("vec_id"), col("embedding")))
-  }
-
-  /** Stage decomposition for the walk family (round 18, the r17
-    * verdict's ask #4; Profile --walk-stages): replicates
-    * [[annGraphWalk]] / [[annGraphWalkAdaptive]] stage by stage and
-    * times each with the noop sink (guide §1.4) — store/assignment,
-    * kNN graph build (checkpoint), entry lookup, the greedy descent
-    * loop (whose per-hop checkpoint+emptiness driver actions are the
-    * suspected fixed cost), and the final emit sort.
-    */
-  private[graft] def walkStageProbe(s: SparkSession, d: String): Unit = {
-    def time[A](label: String)(f: => A): A = {
-      val t0 = System.nanoTime(); val r = f
-      println(f"[profile] walk-stages $label%-26s ${(System.nanoTime() - t0) / 1e9}%6.2f s")
-      r
-    }
-    def noop(df: DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
-    val emb = Tables.embeddings(s, d)
-    // ---- fixed-k op, stage by stage (mirrors annGraphWalk) ----
-    val centroids = fixedCentroids(s, d)
-    val assigned = assignedStore(s, d)
-    time("fixed: store read")(noop(assigned))
-    val pairSims = assigned.as("a").join(assigned.as("b"),
-        col("a.cent_id") === col("b.cent_id") &&
-          col("a.vec_id") =!= col("b.vec_id"))
-      .select(col("a.vec_id").as("src"), col("b.vec_id").as("dst"),
-        cosineSim(col("a.embedding"), col("b.embedding")).as("g_sim"))
-    val graph = time("fixed: knn graph ckpt") {
-      graft.plans.TopK.perKey(pairSims, Seq("src"), "g_sim", "dst", walkDegree)
-        .select(col("src"), col("dst")).localCheckpoint()
-    }
-    val queriesDf = emb.filter(col("vec_id") % 101 === 0)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-    val entry = probesOf(queriesDf, centroids, nprobe = 1)
-      .join(assigned.select(col("cent_id"), col("vec_id")), Seq("cent_id"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .groupBy(col("query_id")).agg(min(col("vec_id")).as("node"))
-    time("fixed: entry lookup")(noop(entry))
-    val walked = time("fixed: greedy loop")(
-      greedyWalk(graph, queriesDf, entry,
-        assigned.select(col("vec_id"), col("embedding"))))
-    time("fixed: emit sort")(noop(walked))
-    // ---- adaptive op, stage by stage (mirrors annGraphWalkAdaptive) ----
-    val (fine, toMid, fineAssign) = time("adaptive: quantizer parts")(
-      threeLevelParts(s, emb, annK(emb.count())))
-    val assigned2 = time("adaptive: assignment ckpt")(
-      fineAssign(emb, "vec_id", "embedding").localCheckpoint())
-    val pairSims2 = assigned2.as("a").join(assigned2.as("b"),
-        col("a.cent_id") === col("b.cent_id") &&
-          col("a.vec_id") =!= col("b.vec_id"))
-      .select(col("a.vec_id").as("src"), col("b.vec_id").as("dst"),
-        cosineSim(col("a.embedding"), col("b.embedding")).as("g_sim"))
-    val graph2 = time("adaptive: knn graph ckpt") {
-      graft.plans.TopK.perKey(pairSims2, Seq("src"), "g_sim", "dst", walkDegree)
-        .select(col("src"), col("dst")).localCheckpoint()
-    }
-    val entry2 = fineProbes(
-        toMid(queriesDf, "query_id", "q_emb"), fine, nprobe = 1)
-      .join(assigned2.select(col("cent_id"), col("vec_id")), Seq("cent_id"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .groupBy(col("query_id")).agg(min(col("vec_id")).as("node"))
-    time("adaptive: entry lookup")(noop(entry2))
-    val walked2 = time("adaptive: greedy loop")(
-      greedyWalk(graph2, queriesDf, entry2,
-        assigned2.select(col("vec_id"), col("embedding"))))
-    time("adaptive: emit sort")(noop(walked2))
   }
 
   val queries: Map[String, Q] = Map(

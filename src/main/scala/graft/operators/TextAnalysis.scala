@@ -235,12 +235,8 @@ object TextAnalysis {
         .localCheckpoint()
     } finally {
       s.sql(s"DROP TABLE IF EXISTS $keeperTbl")
-      try {
-        import scala.jdk.CollectionConverters._
-        val root = java.nio.file.Paths.get(tmp)
-        java.nio.file.Files.walk(root).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-      } catch { case _: Throwable => () } // best-effort temp cleanup
+      try graft.TempDirs.deleteRecursively(tmp)
+      catch { case _: Throwable => () } // best-effort temp cleanup
     }
   }
 
@@ -441,9 +437,9 @@ object TextAnalysis {
   }
 
   /** The decontamination pair PARAMETERIZED for the crossover
-    * measurement (Profile --decontam-crossover): eval set = doc_id <
-    * benchMax, and — unlike the registered harness-SF operators — the
-    * shingle join carries NO broadcast hint, so the planner does what
+    * measurement (OperatorsSpec pins bloom == exact on it): eval set
+    * = doc_id < benchMax, and — unlike the registered harness-SF
+    * operators — the shingle join carries NO broadcast hint, so the planner does what
     * it would at deployment: broadcast while the eval side fits,
     * shuffle both sides once it doesn't. That unhinted large-eval
     * regime is exactly where the bloom gate earns its keep (the
@@ -459,8 +455,8 @@ object TextAnalysis {
     // persist only on the bloom path, where the eval shingles feed two
     // driver-materialized reads (count, bloom build) before the join;
     // the persist lifetime stays INSIDE this function — unpersisted as
-    // soon as the bloom literal is collected, so no caller (Profile
-    // clearCache()s, the spec does not) inherits executor storage. The
+    // soon as the bloom literal is collected, so no caller (the spec
+    // never clearCache()s) inherits executor storage. The
     // returned join recomputes the small eval side once, exactly like
     // the exact path does.
     val bench0 = contamShingles(docs.filter(col("doc_id") < benchMax), "bench_id")

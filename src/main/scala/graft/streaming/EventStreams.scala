@@ -848,10 +848,11 @@ object EventStreams extends Serializable {
     // dd_pipeline precedent): the three stages write disjoint
     // artifacts (manifest dir, band index + pairs dir, IVF index +
     // topk dir) and all read the one checkpointed batch frame, so
-    // nothing orders them. Measured split (Profile --stmt-stages,
-    // warm): dedup 3.7 s dominates over manifest 0.7 + ann 1.0 — the
-    // two small stages back-fill the dedup stage's tail instead of
-    // serializing after it. Submitted FIFO with dedup first so the
+    // nothing orders them. Measured split (round 18, warm; `Profile
+    // <sfDir> statement_batch_probe` reports it per stage): dedup 3.7 s
+    // dominates over manifest 0.7 + ann 1.0 — the two small stages
+    // back-fill the dedup stage's tail instead of serializing after
+    // it. Submitted FIFO with dedup first so the
     // dominant stage keeps resource priority; per-stage replay
     // contracts (_APPLIED markers, whole-dir rewrites) are unchanged,
     // and a failure in any stage cancels the others and rethrows

@@ -12,7 +12,8 @@ import org.apache.spark.sql.classic.ExpressionUtils
   * Spark 4 made the Column/Expression conversion `private[sql]`
   * (columnNodeSupport.scala); custom Catalyst expressions still need
   * it, so this one-file subpackage exposes it, the plan round-trip,
-  * and the awaitable tag cancel [[graft.Stages]] drains with.
+  * the awaitable tag cancel [[graft.Stages]] drains with, and the two
+  * listener-side members [[graft.Profile]] reads.
   */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -30,4 +31,13 @@ object Bridge {
       reason: String): scala.concurrent.Future[Unit] =
     sc.cancelJobsWithTagWithFuture(tag, reason)
       .map(_ => ())(scala.concurrent.ExecutionContext.parasitic)
+
+  /** Blocks until every event posted so far has reached every listener. */
+  def waitUntilEmpty(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+
+  /** The query execution an execution-end event describes (null when
+    * the event came from the event log, not a live session).
+    */
+  def queryExecution(e: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd)
+      : org.apache.spark.sql.execution.QueryExecution = e.qe
 }

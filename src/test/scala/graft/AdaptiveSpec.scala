@@ -55,8 +55,8 @@ class AdaptiveSpec extends SparkTestBase {
     // size distribution: join cost is Σ bucket², and a bucket only
     // grows with the NEAR-DUP CLUSTER behind it (a hot cluster of m
     // docs shares band keys; unrelated docs collide at hash-collision
-    // rates). Measured at 25× on the jittered corpus (Profile
-    // --lsh-skew): 137,215 buckets, median 1, max 121 — the hottest
+    // rates). Measured at 25× on the jittered corpus (the retired
+    // Profile --lsh-skew mode): 137,215 buckets, median 1, max 121 — the hottest
     // bucket is 121² ≈ 14.6k of 1.66M pairs (<1%), and the executed
     // adaptive plan shows no skew=true even though every copy there is
     // a true near-dup of 24 others. This spec pins the property that
@@ -105,7 +105,8 @@ class AdaptiveSpec extends SparkTestBase {
   }
 
   test("adaptive ANN: candidate volume is occupancy-bounded on a 20x corpus (quadratic-path guard)") {
-    // Profile --ann-k-sweep measures this curve offline; this is the
+    // `Profile <sfDir> ann_incremental_adaptive ann_incremental` shows
+    // this curve offline; this is the
     // always-on CI form (round-11 ask): a future parameter change that
     // reintroduces the fixed-k quadratic path — k no longer tracking n,
     // occupancy no longer bounded — must fail a spec, not a judge
@@ -172,7 +173,8 @@ class AdaptiveSpec extends SparkTestBase {
     // the replicated copies are bit-identical, so assignments tie-break
     // into the lowest duplicate's cell and non-empty-list counts stay
     // at base-n regardless of selection (the jittered-corpus census is
-    // Profile --ann-occupancy's job). Selection itself must deliver
+    // the retired Profile --ann-occupancy mode's job; the 20x test
+    // above pins occupancy). Selection itself must deliver
     // exactly k centroids; the value prefix delivered min(k, |{id<k}|).
     val got = operators.Similarity.threeLevelParts(spark, emb, k)._1.count()
     assert(got == k,

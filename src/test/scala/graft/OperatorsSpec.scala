@@ -641,8 +641,8 @@ class OperatorsSpec extends SparkTestBase {
   test("decontam bloom gate: output-equal and selective at the larger-eval regime") {
     // the regime the bloom gate exists for: an eval set larger than
     // the registered operator's 20 docs, joined WITHOUT a broadcast
-    // hint (decontamMeasure is what Profile --decontam-crossover
-    // sweeps). Equality must hold — false negatives don't exist — and
+    // hint (decontamMeasure is what the retired Profile
+    // --decontam-crossover mode swept). Equality must hold — false negatives don't exist — and
     // the map-only gate must pass only a SELECTIVE fraction of the
     // corpus shingle stream: every truly-contaminated shingle plus a
     // bounded FP tail, never most of the stream.

@@ -98,7 +98,8 @@ def rows_for(fi, n):
 def main():
     # optional scale mode: gen_avro.py <dst_dir> <factor> writes
     # factor*28 readable containers (no sidecar, no corrupt legs) for
-    # the Profile --avro-scale listing/decode-amortization measurement
+    # a listing/decode-amortization measurement (the retired Profile
+    # --avro-scale mode's numbers are recorded in SURVEY.md)
     if len(sys.argv) == 3:
         dst, factor = sys.argv[1], int(sys.argv[2])
         os.makedirs(dst, exist_ok=True)
