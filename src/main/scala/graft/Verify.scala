@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,14 +10,10 @@ object Verify {
       case Array(a, b)    => (a, b, "")
       case Array(a, b, p) => (a, b, p)
     }
+    // the same session every test and bench run builds, so the oracle
+    // gate checks the plans they run
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build(s"local[$cpus]", "graft-verify")
     new java.io.File(outDir).mkdirs()
     // The byte-level mm_* oracles index CHARACTERS in DuckDB but UTF-8
     // BYTES in Spark; they coincide only on a pure-ASCII corpus. The

@@ -404,8 +404,7 @@ object Dedup {
     * loudly at 64 rounds rather than emitting a non-fixpoint.
     */
   private[graft] def kcoreAssign(nodes: DataFrame, pairs: DataFrame,
-      k: Int = 2, maxRounds: Int = 64,
-      compactEveryOverride: Option[Int] = None): DataFrame = {
+      k: Int = 2, maxRounds: Int = 64): DataFrame = {
     // ONE static mirrored-edge checkpoint; each round filters it by
     // the (node-cardinality) alive set instead of re-materializing a
     // shrunken edge copy — on a clique-dense graph the edge set barely
@@ -413,22 +412,7 @@ object Dedup {
     // copies and blew executor memory at the 54.6M-edge 100× point.
     // Per-round state that IS checkpointed (flagged/remaining/removed)
     // is bounded by the document count, not the edge count.
-    // SPARK_GRAFT_KCORE_COMPACT_EVERY=C (round 16, the r15 verdict's
-    // ask #5): every C removal rounds, REWRITE the edge checkpoint
-    // filtered to the alive set and free the old blocks — trades write
-    // volume against re-reading a disk-resident ~50 GB checkpoint
-    // every round at 400×. Default OFF (0): the measured A/B decides;
-    // the round-14 accumulate-every-round OOM is not reintroduced
-    // because at most ONE extra edge copy is ever live and the stale
-    // one unpersists immediately.
-    // compactEveryOverride is the spec's injection seam (env vars are
-    // not settable per-test in a forked JVM): the equality spec forces
-    // the compaction path on a many-round peel and asserts the output
-    // is bit-identical to the default path's.
-    val compactEvery = compactEveryOverride.orElse(
-      sys.env.get("SPARK_GRAFT_KCORE_COMPACT_EVERY")
-        .flatMap(_.toIntOption)).filter(_ > 0)
-    var edges = pairs.unionAll(
+    val edges = pairs.unionAll(
       pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
       .localCheckpoint()
     var remaining = nodes.localCheckpoint()
@@ -472,16 +456,6 @@ object Dedup {
         removedRounds += removed
         remaining = flagged.filter(col("deg") >= k)
           .select(col("doc_id"))
-        if (compactEvery.exists(c => round % c == 0)) {
-          val prev = edges
-          edges = edges
-            .join(remaining.select(col("doc_id").as("doc_a")),
-              Seq("doc_a"), "left_semi")
-            .join(remaining.select(col("doc_id").as("doc_b")),
-              Seq("doc_b"), "left_semi")
-            .localCheckpoint()
-          prev.unpersist(false)
-        }
         round += 1
       }
     }

@@ -17,6 +17,13 @@ import graft.sources.Tables
   * to_numeric().round(2) `:1586-1588`, product_codes.json lookup,
   * pd.concat standardization) is a codegen'd expression here — no
   * UDFs, so the 100 TB path stays inside WholeStageCodegen.
+  *
+  * The five statement walks — purchase confirm, redemption, dividend,
+  * apply and conversion — are one [[Walk]] value each ([[confirmWalk]],
+  * [[redeemWalk]], [[divWalk]], [[applyWalk]], [[convWalk]]): matrix,
+  * label columns, filename routing, corpus dir and dict. One compiler
+  * ([[classify]], [[routeCol]]) and one oracle renderer ([[walkCtes]],
+  * [[routeSql]]) read them, so both engines classify from the same rows.
   */
 object FundEtl {
   private type Q = (SparkSession, String) => DataFrame
@@ -51,6 +58,13 @@ object FundEtl {
   private def C(lo: Int, hi: Int, p: String): SigLit = SigLit('c', lo, hi, p)
   private def not(l: SigLit): SigLit = l.copy(neg = true)
 
+  /** One row of a walk's platform matrix: the platform and its DNF
+    * signature. Each walk's rule row adds its own label fields. */
+  private[graft] trait SigRule {
+    def platform: String
+    def clauses: Seq[Seq[SigLit]]
+  }
+
   /** One platform of the reference's 23-platform matrix: the DNF
     * signature plus the field LABELS that drive regex extraction for
     * statements of that platform — the reference encodes both as
@@ -70,7 +84,7 @@ object FundEtl {
       // return LISTS — one tuple per 交易序号 / 交易信息 block
       // (purchase_confirm_extractor.py:173-271 / :660-726); the
       // marker drives etl_multi_record's per-block explode.
-      recMarker: String = "")
+      recMarker: String = "") extends SigRule
 
   /** The full 23-platform signature + label matrix, one row per
     * reference platform in the reference's elif order. Filename
@@ -241,6 +255,7 @@ object FundEtl {
       dateLabel: String, dateMode: String, dateFallback: Boolean,
       feeDefault: Boolean = false, recMarker: String = "",
       recValidity: String = "", sectionMarker: String = "")
+      extends SigRule
 
   /** The redemption extractor's 17-platform matrix in the reference's
     * elif order (`redemption_extractor.py:1240-1290` — jd_conversion
@@ -381,6 +396,7 @@ object FundEtl {
       amountMode: String = "same", sharesMode: String = "same",
       recMarker: String = "", recValidity: String = "",
       endFromConfirm: Boolean = false, tokenMode: Boolean = false)
+      extends SigRule
 
   /** The dividend chain's 23 platforms in the reference's elif order
     * (`dividend_extractor.py:1325-1443`).
@@ -490,7 +506,7 @@ object FundEtl {
   private[graft] final case class ApplyRule(platform: String,
       clauses: Seq[Seq[SigLit]], nameLabel: String, codeLabel: String,
       amountLabel: String, amountMode: String = "same",
-      recMarker: String = "")
+      recMarker: String = "") extends SigRule
 
   private[graft] val applyMatrix: Seq[ApplyRule] = Seq(
     // :988 — 好买基金 in lines[:2]
@@ -588,12 +604,19 @@ object FundEtl {
     * the DERIVED 转入金额 = 转出金额 − 手续费, `:215-221`).
     */
   private[graft] final case class ConvRule(platform: String,
-      clauses: Seq[Seq[SigLit]], mode: String) // labels | pairnext
+      clauses: Seq[Seq[SigLit]], mode: String) extends SigRule // labels | pairnext
 
   private[graft] val convMatrix: Seq[ConvRule] = Seq(
     ConvRule("jingdong", Seq(Seq(F("kenterijijin")), Seq(C(0, 2, "肯特瑞"))),
       "labels"),
     ConvRule("tiantian", Seq(Seq(F("tiantian"))), "pairnext"))
+
+  /** The conversion walk's INCLUSION filter (`conversion_extractor.py:126`):
+    * only 超级/转换 files enter the run; everything else surfaces as
+    * EXCL_NOT_CONV. */
+  private[graft] val convBizRules: Seq[(String, Seq[String], String)] = Seq(
+    ("chaoji", Nil, "CONV"), // 超级
+    ("zhuanhuan", Nil, "CONV")) // 转换
 
   /** product_codes_conversion.json analog — the conversion walk's OWN
     * dict (two corpus products deliberately unmapped). */
@@ -614,6 +637,75 @@ object FundEtl {
     * (`purchase_confirm_extractor.py:1417-1439`).
     */
   private[graft] val statementsDir = "/root/repo/data/statements"
+
+  /** One statement walk as data — everything [[classify]] compiles for
+    * Spark and [[walkCtes]] renders for the oracle, so both engines
+    * read the same rows:
+    *   - `matrix`: the platform matrix, first match wins;
+    *   - `labels`: the label columns, each a column name and then one
+    *     value per matrix row (String or Boolean; "" is NULL in both
+    *     engines);
+    *   - `route`/`routeDefault`: the ordered filename-routing rows
+    *     (keyword, keep-only-if-any-of, class) — empty for dividends;
+    *   - `dir`: the committed corpus the walk reads;
+    *   - `dict`/`dictValue`: the product dict, name → `dictValue`.
+    */
+  private[graft] final case class Walk(matrix: Seq[SigRule],
+      labels: Seq[(String, Seq[Any])],
+      route: Seq[(String, Seq[String], String)], routeDefault: String,
+      dir: String, dict: Seq[(String, String)] = productLedger,
+      dictValue: String = "ledger_id") {
+    def platformArms: Seq[(String, Seq[Seq[SigLit]])] =
+      matrix.map(r => r.platform -> r.clauses)
+    /** A routing row as a filename DNF: kw ∧ (a ∨ b) ≡ (kw ∧ a) ∨ (kw ∧ b). */
+    def routeArms: Seq[(String, Seq[Seq[SigLit]])] = route.map {
+      case (kw, Nil, cls) => cls -> Seq(Seq(F(kw)))
+      case (kw, any, cls) => cls -> any.map(a => Seq(F(kw), F(a)))
+    }
+    /** One row per platform: the platform, then its label values. */
+    def labelRows: Seq[Seq[Any]] =
+      matrix.indices.map(i => matrix(i).platform +: labels.map(_._2(i)))
+  }
+
+  private def labelCols[R](rows: Seq[R])(cols: (String, R => Any)*): Seq[(String, Seq[Any])] =
+    cols.map { case (name, f) => name -> rows.map(f) }
+
+  private[graft] val confirmWalk = Walk(platformMatrix,
+    labelCols(platformMatrix)(("name_label", _.nameLabel),
+      ("code_label", _.codeLabel), ("amount_label", _.amountLabel),
+      ("shares_label", _.sharesLabel), ("fee_label", _.feeLabel),
+      ("date_label", _.dateLabel), ("rec_marker", _.recMarker)),
+    bizRules, "OTH", statementsDir)
+
+  private[graft] val redeemWalk = Walk(redemptionMatrix,
+    labelCols(redemptionMatrix)(("name_label", _.nameLabel),
+      ("code_label", _.codeLabel), ("amount_label", _.amountLabel),
+      ("shares_label", _.sharesLabel), ("fee_label", _.feeLabel),
+      ("date_label", _.dateLabel), ("date_mode", _.dateMode),
+      ("date_fb", _.dateFallback), ("fee_def", _.feeDefault),
+      ("rec_marker", _.recMarker), ("rec_validity", _.recValidity),
+      ("section_marker", _.sectionMarker)),
+    redeemBizRules, "RED", "/root/repo/data/redemptions")
+
+  private[graft] val divWalk = Walk(dividendMatrix,
+    labelCols(dividendMatrix)(("name_label", _.nameLabel),
+      ("code_label", _.codeLabel), ("amount_label", _.amountLabel),
+      ("shares_label", _.sharesLabel), ("amount_mode", _.amountMode),
+      ("shares_mode", _.sharesMode), ("rec_marker", _.recMarker),
+      ("rec_validity", _.recValidity), ("end_confirm", _.endFromConfirm),
+      ("token_mode", _.tokenMode)),
+    Nil, "", "/root/repo/data/dividends")
+
+  private[graft] val applyWalk = Walk(applyMatrix,
+    labelCols(applyMatrix)(("name_label", _.nameLabel),
+      ("code_label", _.codeLabel), ("amount_label", _.amountLabel),
+      ("amount_mode", _.amountMode), ("rec_marker", _.recMarker)),
+    applyBizRules, "SUB", "/root/repo/data/applies")
+
+  private[graft] val convWalk = Walk(convMatrix,
+    labelCols(convMatrix)(("mode", _.mode)),
+    convBizRules, "EXCL_NOT_CONV", "/root/repo/data/conversions",
+    convLedger, "conv_ledger")
 
   /** Signature-based document classification — the reference routes
     * each statement by substring signatures of filename + first lines
@@ -1160,7 +1252,7 @@ object FundEtl {
     * a generated multi-thousand-file tree.
     */
   private[graft] def ingestFrom(s: SparkSession, dir: String): DataFrame =
-    extractStatementFields(s, classifyStatements(s, loadStatements(s, dir)))
+    extractStatementFields(s, classify(s, confirmWalk, loadStatements(s, dir)))
       .orderBy(col("file_name"))
 
   /** binaryFile scan of dated statement folders → (path, content,
@@ -1199,78 +1291,64 @@ object FundEtl {
     if (l.neg) !p else p
   }
 
-  /** The whole 23-platform matrix COMPILED into one first-match-wins
-    * when-chain — the rule relation is tiny and static per run, so the
-    * scalable plan is rules-as-data driving a generated map-only
-    * expression: no join, no shuffle, the classification stays inside
-    * WholeStageCodegen at any corpus size. (The previous rules-JOIN
+  /** A walk's (value, DNF) arms COMPILED into one first-match-wins
+    * when-chain, else `default` — the rule relation is tiny and static
+    * per run, so the scalable plan is rules-as-data driving a generated
+    * map-only expression: no join, no shuffle, the classification stays
+    * inside WholeStageCodegen at any corpus size. (The previous rules-JOIN
     * shape cost a row_number window — a full shuffle on file_name —
     * per ingest; the compiled chain costs zero exchanges.)
     */
-  private def matrixChain(rows: Seq[(String, Seq[Seq[SigLit]])]): org.apache.spark.sql.Column = {
+  private def chain(arms: Seq[(String, Seq[Seq[SigLit]])],
+      default: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
     def pred(cl: Seq[Seq[SigLit]]) =
       cl.map(_.map(litCol).reduce(_ && _)).reduce(_ || _)
-    rows.tail
-      .foldLeft(when(pred(rows.head._2), rows.head._1)) {
+    arms.tail
+      .foldLeft(when(pred(arms.head._2), arms.head._1)) {
         (acc, r) => acc.when(pred(r._2), r._1)
       }
-      .otherwise(lit(null).cast("string"))
+      .otherwise(default)
   }
 
-  private[graft] def platformCol: org.apache.spark.sql.Column =
-    matrixChain(platformMatrix.map(r => (r.platform, r.clauses)))
+  /** The walk's filename routing compiled the same way — exclusion
+    * rows first, keep-only-if conjuncts as extra filename literals,
+    * the walk's default class last. */
+  private[graft] def routeCol(w: Walk): org.apache.spark.sql.Column =
+    chain(w.routeArms, lit(w.routeDefault))
 
-  /** The redemption chain compiled the same way from
-    * [[redemptionMatrix]] — same machinery, different rule DATA.
-    */
-  private[graft] def redeemPlatformCol: org.apache.spark.sql.Column =
-    matrixChain(redemptionMatrix.map(r => (r.platform, r.clauses)))
-
-  /** First-match-wins filename routing compiled from ordered
-    * (keyword, keep-only-if-any-of, class) rows — exclusion rows
-    * first, exception conjuncts as extra filename literals. The
-    * confirm chain defaults to OTH; the redemption chain to RED
-    * (everything left in a redemption folder IS a redemption).
-    */
-  private def bizChain(rules: Seq[(String, Seq[String], String)],
-      default: String): org.apache.spark.sql.Column = {
-    def pred(r: (String, Seq[String], String)) = {
-      val kw = col("file_name").contains(lit(r._1))
-      if (r._2.isEmpty) kw
-      else kw && r._2.map(k => col("file_name").contains(lit(k))).reduce(_ || _)
-    }
-    rules.tail
-      .foldLeft(when(pred(rules.head), rules.head._3)) { (acc, r) =>
-        acc.when(pred(r), r._3)
-      }
-      .otherwise(lit(default))
+  /** The walk's label relation: one row per platform, "" → NULL. */
+  private[graft] def labelFrame(s: SparkSession, w: Walk): DataFrame = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(StructField("platform", StringType) +:
+      w.labels.map { case (name, vs) => vs.head match {
+        case _: Boolean => StructField(name, BooleanType, nullable = false)
+        case _ => StructField(name, StringType)
+      }})
+    val rows = w.labelRows.map(r => Row.fromSeq(r.map { case "" => null; case v => v }))
+    s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
   }
 
-  private[graft] def bizTypeCol: org.apache.spark.sql.Column =
-    bizChain(bizRules, "OTH")
+  private def dictFrame(s: SparkSession, w: Walk): DataFrame = {
+    import s.implicits._
+    w.dict.toDF("p_name", w.dictValue)
+  }
 
-  private[graft] def redeemBizCol: org.apache.spark.sql.Column =
-    bizChain(redeemBizRules, "RED")
-
-  /** Signature classification: the compiled matrix predicate assigns
-    * the platform; the per-platform field LABELS (name/code/amount/
-    * shares/fee/date — the reference's per-platform regex variance,
+  /** Signature classification for any walk: the compiled matrix
+    * predicate assigns the platform; the per-platform labels and modes
+    * (the reference's per-platform regex variance,
     * `purchase_confirm_extractor.py:34-1365`) arrive by broadcast
-    * equi-join against the 23-row label relation. Keeps every input
+    * equi-join against the walk's label relation. Keeps every input
     * column (routing flags ride through to extraction). UNKNOWN files
     * keep NULL labels — extraction falls back to the generic defaults.
     */
-  private[graft] def classifyStatements(s: SparkSession, files: DataFrame): DataFrame = {
-    import s.implicits._
-    val labels = platformMatrix
-      .map(r => (r.platform, r.nameLabel, r.codeLabel, r.amountLabel,
-        r.sharesLabel, r.feeLabel, r.dateLabel,
-        if (r.recMarker.isEmpty) null else r.recMarker))
-      .toDF("platform", "name_label", "code_label", "amount_label",
-        "shares_label", "fee_label", "date_label", "rec_marker")
-    files.withColumn("platform", platformCol)
-      .join(broadcast(labels), Seq("platform"), "left")
-  }
+  private[graft] def classify(s: SparkSession, w: Walk, files: DataFrame): DataFrame =
+    files.withColumn("platform", chain(w.platformArms, lit(null).cast("string")))
+      .join(broadcast(labelFrame(s, w)), Seq("platform"), "left")
+
+  /** [[classify]] over the walk's committed corpus. */
+  private[graft] def classify(s: SparkSession, w: Walk): DataFrame =
+    classify(s, w, loadStatements(s, w.dir))
 
   /** The map-only tail of the ingest pipeline (filename routing, field
     * extraction, normalization, dict enrich, validity flag) — shared
@@ -1279,17 +1357,15 @@ object FundEtl {
     * is stateless, so the same code runs per micro-batch unchanged.
     * Input must already carry (content, file_name, batch_date,
     * platform, and the six per-platform label columns from
-    * [[classifyStatements]]). Every label regex coalesces to the
+    * [[classify]] over [[confirmWalk]]). Every label regex coalesces to the
     * generic default so UNKNOWN-platform files still best-effort
     * extract (the reference's failed-file rows keep whatever fields
     * its generic regexes find).
     */
   private[graft] def extractStatementFields(s: SparkSession, classified: DataFrame,
       extra: Seq[String] = Nil): DataFrame = {
-    import s.implicits._
-    val dict = productLedger.toDF("p_name", "ledger_id")
     classified
-      .withColumn("biz_type", bizTypeCol)
+      .withColumn("biz_type", routeCol(confirmWalk))
       .withColumn("fund_code", expr(
         "nullif(regexp_extract(content, concat(coalesce(code_label, '基金代码'), '：([0-9]{6})'), 1), '')"))
       .withColumn("product_name", expr(
@@ -1304,7 +1380,7 @@ object FundEtl {
         regexp_replace(nullif(expr(
           "regexp_extract(content, concat(coalesce(date_label, '确认日期'), '：(.+)'), 1)"), lit("")),
           "[^0-9]", ""))
-      .join(broadcast(dict), col("product_name") === col("p_name"), "left")
+      .join(broadcast(dictFrame(s, confirmWalk)), col("product_name") === col("p_name"), "left")
       .select(Seq(col("file_name"), col("batch_date"),
         coalesce(col("platform"), lit("UNKNOWN")).as("platform"),
         col("biz_type"), col("fund_code"), col("product_name"),
@@ -1333,7 +1409,7 @@ object FundEtl {
     */
   val etlOcrRoute: Q = (s, _) => {
     val routed = ocrRouted(loadStatements(s, "*.txt", statementsDir, statementsScanDir))
-    extractStatementFields(s, classifyStatements(s, routed), extra = Seq("ocr_used"))
+    extractStatementFields(s, classify(s, confirmWalk, routed), extra = Seq("ocr_used"))
       .orderBy(col("file_name"))
   }
 
@@ -1383,7 +1459,7 @@ object FundEtl {
     */
   val etlPdfDecode: Q = (s, _) => {
     val files = containerDecoded(loadStatements(s, "*.gpdf", statementsPdfDir))
-    extractStatementFields(s, classifyStatements(s, files), extra = Seq("container_ok"))
+    extractStatementFields(s, classify(s, confirmWalk, files), extra = Seq("container_ok"))
       .orderBy(col("file_name"))
   }
 
@@ -1412,7 +1488,7 @@ object FundEtl {
       .withColumn("pdf_ok", col("text").isNotNull)
       .withColumn("content", coalesce(col("text"), lit("")))
       .drop("text", "path")
-    extractStatementFields(s, classifyStatements(s, files),
+    extractStatementFields(s, classify(s, confirmWalk, files),
       extra = Seq("pdf_ok", "content"))
       .orderBy(col("file_name"))
   }
@@ -1436,7 +1512,7 @@ object FundEtl {
     val files = graft.sources.Xlsx.text(s, statementsXlsxDir)
       .withColumn("xlsx_ok", col("content").isNotNull)
       .withColumn("content", coalesce(col("content"), lit("")))
-    extractStatementFields(s, classifyStatements(s, files),
+    extractStatementFields(s, classify(s, confirmWalk, files),
       extra = Seq("xlsx_ok", "content"))
       .orderBy(col("file_name"))
   }
@@ -1457,7 +1533,7 @@ object FundEtl {
     * legitimately yields one record.
     */
   val etlMultiRecord: Q = (s, _) => {
-    classifyStatements(s, loadStatements(s, statementsDir))
+    classify(s, confirmWalk)
       .filter(col("rec_marker").isNotNull)
       .withColumn("product_name", expr(
         "nullif(regexp_extract(content, concat(coalesce(name_label, '产品名称'), '：(.+)'), 1), '')"))
@@ -1481,32 +1557,6 @@ object FundEtl {
         col("rec_no").cast("long").as("rec_no"), col("product_name"),
         col("fund_code"), col("amount"), col("shares"), col("fee"))
       .orderBy(col("file_name"), col("rec_no"))
-  }
-
-  private[graft] val redemptionsDir = "/root/repo/data/redemptions"
-
-  /** Redemption classification: the compiled [[redemptionMatrix]]
-    * chain assigns the platform; the per-platform labels, date mode,
-    * fallback/default flags, record marker/validity and section
-    * marker ride in by broadcast join against the 17-row relation —
-    * the redemption mirror of [[classifyStatements]].
-    */
-  private[graft] def classifyRedemptions(s: SparkSession, files: DataFrame): DataFrame = {
-    import s.implicits._
-    val labels = redemptionMatrix
-      .map(r => (r.platform, r.nameLabel, r.codeLabel, r.amountLabel,
-        r.sharesLabel, r.feeLabel,
-        if (r.dateLabel.isEmpty) null else r.dateLabel,
-        r.dateMode, r.dateFallback, r.feeDefault,
-        if (r.recMarker.isEmpty) null else r.recMarker,
-        if (r.recValidity.isEmpty) null else r.recValidity,
-        if (r.sectionMarker.isEmpty) null else r.sectionMarker))
-      .toDF("platform", "name_label", "code_label", "amount_label",
-        "shares_label", "fee_label", "date_label", "date_mode",
-        "date_fb", "fee_def", "rec_marker", "rec_validity",
-        "section_marker")
-    files.withColumn("platform", redeemPlatformCol)
-      .join(broadcast(labels), Seq("platform"), "left")
   }
 
   /** The five redemption date modes compiled into ONE expression over
@@ -1547,10 +1597,8 @@ object FundEtl {
     * Excluded files surface as EXCL_* rows, never silently dropped.
     */
   val etlRedeemIngest: Q = (s, _) => {
-    import s.implicits._
-    val dict = productLedger.toDF("p_name", "ledger_id")
-    classifyRedemptions(s, loadStatements(s, redemptionsDir))
-      .withColumn("biz_type", redeemBizCol)
+    classify(s, redeemWalk)
+      .withColumn("biz_type", routeCol(redeemWalk))
       .withColumn("xcontent", expr(
         """CASE WHEN section_marker IS NULL THEN content
           |     WHEN instr(content, section_marker) > 0
@@ -1568,7 +1616,7 @@ object FundEtl {
         "cast(replace(nullif(regexp_extract(xcontent, concat(coalesce(fee_label, '手续费'), '：([0-9,]+[.][0-9]+)'), 1), ''), ',', '') as double)"),
         when(col("fee_def"), lit(0.0))))
       .withColumn("arrival_date", redeemDateExpr("xcontent"))
-      .join(broadcast(dict), col("product_name") === col("p_name"), "left")
+      .join(broadcast(dictFrame(s, redeemWalk)), col("product_name") === col("p_name"), "left")
       .select(col("file_name"), col("batch_date"),
         coalesce(col("platform"), lit("UNKNOWN")).as("platform"),
         col("biz_type"), col("fund_code"), col("product_name"),
@@ -1590,7 +1638,7 @@ object FundEtl {
     * zero exchanges before the presentation sort.
     */
   val etlRedeemMulti: Q = (s, _) => {
-    classifyRedemptions(s, loadStatements(s, redemptionsDir))
+    classify(s, redeemWalk)
       .filter(col("rec_marker").isNotNull)
       .withColumn("product_name", expr(
         "nullif(regexp_extract(content, concat(name_label, '：(.+)'), 1), '')"))
@@ -1648,7 +1696,7 @@ object FundEtl {
     def g(re: String, i: Int) = expr(s"regexp_extract(line, '$re', $i)")
     def num(c: org.apache.spark.sql.Column) =
       regexp_replace(c, ",", "").cast("double")
-    classifyRedemptions(s, loadStatements(s, redemptionsDir))
+    classify(s, redeemWalk)
       .filter(col("platform") === "zhengdatong")
       .withColumn("product_name", expr(
         "nullif(regexp_extract(content, concat(name_label, '：(.+)'), 1), '')"))
@@ -1674,32 +1722,6 @@ object FundEtl {
           .otherwise(g(zdtStandardRe, 7))).as("fee"),
         col("batch_date").as("arrival_date"))
       .orderBy(col("file_name"), col("row_no"))
-  }
-
-  private[graft] val dividendsDir = "/root/repo/data/dividends"
-
-  /** Dividend classification — the compiled [[dividendMatrix]] chain
-    * plus the broadcast 23-row label/mode relation (the
-    * classifyRedemptions shape).
-    */
-  private[graft] def classifyDividends(s: SparkSession, files: DataFrame): DataFrame = {
-    import s.implicits._
-    val labels = dividendMatrix
-      .map(r => (r.platform,
-        if (r.nameLabel.isEmpty) null else r.nameLabel,
-        if (r.codeLabel.isEmpty) null else r.codeLabel,
-        if (r.amountLabel.isEmpty) null else r.amountLabel,
-        if (r.sharesLabel.isEmpty) null else r.sharesLabel,
-        r.amountMode, r.sharesMode,
-        if (r.recMarker.isEmpty) null else r.recMarker,
-        if (r.recValidity.isEmpty) null else r.recValidity,
-        r.endFromConfirm, r.tokenMode))
-      .toDF("platform", "name_label", "code_label", "amount_label",
-        "shares_label", "amount_mode", "shares_mode", "rec_marker",
-        "rec_validity", "end_confirm", "token_mode")
-    files.withColumn("platform",
-      matrixChain(dividendMatrix.map(r => (r.platform, r.clauses))))
-      .join(broadcast(labels), Seq("platform"), "left")
   }
 
   /** Same-line / next-line dividend value extraction over `src` with
@@ -1747,12 +1769,10 @@ object FundEtl {
 
   private[graft] def divIngestFrame(s: SparkSession,
       classified: Option[DataFrame] = None): DataFrame = {
-    import s.implicits._
-    val dict = productLedger.toDF("p_name", "ledger_id")
     val (sharesRaw, amountRaw) = divValueExprs("content")
     val tokenCode =
       "nullif(regexp_extract(content, '(?:^|[\\n ])([0-9]{6}) [^\\n]*分红', 1), '')"
-    classified.getOrElse(classifyDividends(s, loadStatements(s, dividendsDir)))
+    classified.getOrElse(classify(s, divWalk))
       .withColumn("shares_raw", expr(sharesRaw))
       .withColumn("amount_raw", expr(amountRaw))
       .withColumn("fund_code", expr(
@@ -1768,7 +1788,7 @@ object FundEtl {
         """CASE WHEN end_confirm
           |   THEN date_format(date_sub(to_date(nullif(regexp_extract(content, '确认日期[：: ]*([0-9]{8})', 1), ''), 'yyyyMMdd'), 1), 'yyyyMMdd')
           | ELSE date_format(date_sub(to_date(batch_date, 'yyyyMMdd'), 1), 'yyyyMMdd') END""".stripMargin))
-      .join(broadcast(dict), col("product_name") === col("p_name"), "left")
+      .join(broadcast(dictFrame(s, divWalk)), col("product_name") === col("p_name"), "left")
       .select(col("file_name"), col("batch_date"),
         coalesce(col("platform"), lit("UNKNOWN")).as("platform"),
         col("fund_code"), col("product_name"),
@@ -1790,7 +1810,7 @@ object FundEtl {
   private def divMultiFrame(s: SparkSession,
       classified: Option[DataFrame] = None): DataFrame = {
     val (sharesRaw, amountRaw) = divValueExprs("seg")
-    classified.getOrElse(classifyDividends(s, loadStatements(s, dividendsDir)))
+    classified.getOrElse(classify(s, divWalk))
       .filter(col("rec_marker").isNotNull)
       .withColumn("product_name", expr(
         "nullif(regexp_extract(content, concat(name_label, '[：: ]*(.+)'), 1), '')"))
@@ -1839,7 +1859,7 @@ object FundEtl {
     val gate = s"content rlike '${zdtDivCompactRe.replace("^", "(^|\\\\n)")}' " +
       s"or content rlike '${zdtDivStandardRe.replace("^", "(^|\\\\n)")}'"
     val z = classified
-      .getOrElse(classifyDividends(s, loadStatements(s, dividendsDir)))
+      .getOrElse(classify(s, divWalk))
       .filter(col("platform") === "zhengdatong")
       .withColumn("product_name", expr(
         "nullif(regexp_extract(content, concat(name_label, '[：: ]*(.+)'), 1), '')"))
@@ -1891,8 +1911,6 @@ object FundEtl {
     * platform merge is a bounded per-group sort, never a global one.
     */
   val etlDivMerge: Q = (s, _) => {
-    import s.implicits._
-    val dict = productLedger.toDF("p_name", "ledger_id")
     // ONE classified scan shared by all three legs (round 17): each
     // leg builder defaults to its own binaryFile scan + compiled
     // matrix classification so the standalone ops stay self-contained,
@@ -1905,7 +1923,7 @@ object FundEtl {
     // measurements) or session end; blocks are storage-evictable and
     // a long-lived driver re-running the op reuses the same entry
     // (plan-identity) rather than accreting new ones.
-    val cls = classifyDividends(s, loadStatements(s, dividendsDir)).persist()
+    val cls = classify(s, divWalk).persist()
     val singles = divIngestFrame(s, Some(cls))
       .filter(col("valid") && col("rec_marker").isNull &&
         col("platform") =!= "zhengdatong")
@@ -1921,7 +1939,7 @@ object FundEtl {
         lit("zhengdatong").as("platform"), col("product_name"),
         col("fund_code"), col("div_amount"), col("div_shares"))
     val legs = singles.unionByName(multi).unionByName(zrows)
-      .join(broadcast(dict), col("product_name") === col("p_name"), "inner")
+      .join(broadcast(dictFrame(s, divWalk)), col("product_name") === col("p_name"), "inner")
       .withColumn("seq", concat(col("file_name"), lit("#"),
         lpad(col("leg_no").cast("string"), 6, "0")))
       .withColumn("amount_e2", expr("cast(floor(div_amount * 100 + 0.5) as bigint)"))
@@ -1943,22 +1961,6 @@ object FundEtl {
       .orderBy(col("ledger_id"), col("fund_code"))
   }
 
-  private[graft] val appliesDir = "/root/repo/data/applies"
-
-  /** Apply classification — compiled [[applyMatrix]] chain + the
-    * broadcast 20-row label relation. */
-  private[graft] def classifyApplies(s: SparkSession, files: DataFrame): DataFrame = {
-    import s.implicits._
-    val labels = applyMatrix
-      .map(r => (r.platform, r.nameLabel, r.codeLabel, r.amountLabel,
-        r.amountMode, if (r.recMarker.isEmpty) null else r.recMarker))
-      .toDF("platform", "name_label", "code_label", "amount_label",
-        "amount_mode", "rec_marker")
-    files.withColumn("platform",
-      matrixChain(applyMatrix.map(r => (r.platform, r.clauses))))
-      .join(broadcast(labels), Seq("platform"), "left")
-  }
-
   private def applyAmountExpr(src: String): String =
     s"""CASE WHEN amount_mode = 'both'
        |  THEN coalesce(${divSameSql(src, "amount_label")}, ${divNextSql(src, "amount_label")})
@@ -1974,17 +1976,15 @@ object FundEtl {
     * ingest: compiled map-only chain, broadcast-only joins.
     */
   val etlApplyIngest: Q = (s, _) => {
-    import s.implicits._
-    val dict = productLedger.toDF("p_name", "ledger_id")
-    classifyApplies(s, loadStatements(s, appliesDir))
-      .withColumn("biz_type", bizChain(applyBizRules, "SUB"))
+    classify(s, applyWalk)
+      .withColumn("biz_type", routeCol(applyWalk))
       .withColumn("fund_code", expr(
         "nullif(regexp_extract(content, concat(coalesce(code_label, '基金代码'), '[：: ]*([0-9]{6})'), 1), '')"))
       .withColumn("product_name", expr(
         "nullif(regexp_extract(content, concat(coalesce(name_label, '产品名称'), '[：: ]*(.+)'), 1), '')"))
       .withColumn("apply_amount",
         expr(s"cast(replace(${applyAmountExpr("content")}, ',', '') as double)"))
-      .join(broadcast(dict), col("product_name") === col("p_name"), "left")
+      .join(broadcast(dictFrame(s, applyWalk)), col("product_name") === col("p_name"), "left")
       .select(col("file_name"), col("batch_date"),
         coalesce(col("platform"), lit("UNKNOWN")).as("platform"),
         col("biz_type"), col("fund_code"), col("product_name"),
@@ -2001,7 +2001,7 @@ object FundEtl {
     * (`purchase_extractor.py:236-238` / `:712-714`).
     */
   val etlApplyMulti: Q = (s, _) => {
-    classifyApplies(s, loadStatements(s, appliesDir))
+    classify(s, applyWalk)
       .filter(col("rec_marker").isNotNull)
       .withColumn("product_name", expr(
         "nullif(regexp_extract(content, concat(name_label, '[：: ]*(.+)'), 1), '')"))
@@ -2033,7 +2033,7 @@ object FundEtl {
     "([0-9]{6})(?:[^\\n]*?([0-9,]+[.][0-9]+)|[^\\n]*\\n *([0-9,]+[.][0-9]+))"
 
   val etlApplyRows: Q = (s, _) => {
-    val z = classifyApplies(s, loadStatements(s, appliesDir))
+    val z = classify(s, applyWalk)
       .filter(col("platform") === "zhengdatong")
       .withColumn("product_name", expr(
         "nullif(regexp_extract(content, concat(name_label, '[：: ]*(.+)'), 1), '')"))
@@ -2065,8 +2065,6 @@ object FundEtl {
     single.unionByName(anchors).orderBy(col("file_name"), col("row_no"))
   }
 
-  private[graft] val conversionsDir = "/root/repo/data/conversions"
-
   /** CONVERSION ingest — the 超级转换 walk as one operator: the
     * inclusion filename filter (non-转换 files surface as
     * EXCL_NOT_CONV), the two-platform chain, jd's paired labels vs
@@ -2078,18 +2076,14 @@ object FundEtl {
     * conversion master shape.
     */
   val etlConvIngest: Q = (s, _) => {
-    import s.implicits._
-    val dict = convLedger.toDF("p_name", "conv_ledger")
     def money(lbl: String) =
       s"cast(replace(nullif(regexp_extract(content, '$lbl[：: ]*([0-9,]+[.][0-9]+)', 1), ''), ',', '') as double)"
     val feeA =
       "cast(replace(nullif(regexp_extract(content, '(?:^|\\n)[^\\n]*手续费[^\\n]*?([0-9,]+[.][0-9]+)', 1), ''), ',', '') as double)"
     val feeB =
       "cast(replace(nullif(regexp_extract(content, '([0-9,]+[.][0-9]+) *[（(][^\\n]*\\n[^\\n]*手续费', 1), ''), ',', '') as double)"
-    classifyFrom(s, convMatrix.map(r => (r.platform, r.clauses)),
-      convMatrix.map(r => (r.platform, r.mode)), loadStatements(s, conversionsDir))
-      .withColumn("biz_type", bizChain(Seq(
-        ("chaoji", Nil, "CONV"), ("zhuanhuan", Nil, "CONV")), "EXCL_NOT_CONV"))
+    classify(s, convWalk)
+      .withColumn("biz_type", routeCol(convWalk))
       .withColumn("product_name", expr(
         """CASE WHEN mode = 'pairnext' THEN
           |   nullif(concat(
@@ -2117,7 +2111,7 @@ object FundEtl {
         | THEN cast(cast(floor(out_amount * 100 + 0.5) as bigint)
         |        - coalesce(cast(floor(conv_fee * 100 + 0.5) as bigint), 0) as double) / 100.0
         | ELSE ${money("转入基金确认金额")} END""".stripMargin))
-      .join(broadcast(dict), col("product_name") === col("p_name"), "left")
+      .join(broadcast(dictFrame(s, convWalk)), col("product_name") === col("p_name"), "left")
       .select(col("file_name"), col("batch_date"),
         coalesce(col("platform"), lit("UNKNOWN")).as("platform"),
         col("biz_type"), col("product_name"),
@@ -2127,16 +2121,6 @@ object FundEtl {
         col("conv_fee"), col("batch_date").as("out_confirm_date"),
         (col("out_fund_code").isNotNull && col("platform").isNotNull).as("valid"))
       .orderBy(col("file_name"))
-  }
-
-  /** Generic classify: compiled chain + a broadcast (platform, mode)
-    * relation — for chains whose only per-platform datum is a mode. */
-  private def classifyFrom(s: SparkSession,
-      rows: Seq[(String, Seq[Seq[SigLit]])],
-      modes: Seq[(String, String)], files: DataFrame): DataFrame = {
-    import s.implicits._
-    files.withColumn("platform", matrixChain(rows))
-      .join(broadcast(modes.toDF("platform", "mode")), Seq("platform"), "left")
   }
 
   private[graft] val statementsOcrDir = "/root/repo/data/statements_ocr"
@@ -2198,7 +2182,7 @@ object FundEtl {
 
   val etlOcrReal: Q = (s, _) => {
     val routed = ocrRealRouted(s)
-    extractStatementFields(s, classifyStatements(s, routed),
+    extractStatementFields(s, classify(s, confirmWalk, routed),
       extra = Seq("ocr_used", "ocr_ok", "ocr_conf_ppm", "content"))
       .orderBy(col("file_name"))
   }
@@ -2352,7 +2336,7 @@ object FundEtl {
     val containers = containerDecoded(loadStatements(s, "*.gpdf", statementsPdfDir))
       .drop("container_ok")
     val extracted = extractStatementFields(s,
-      classifyStatements(s, texts.unionByName(containers)),
+      classify(s, confirmWalk, texts.unionByName(containers)),
       extra = Seq("content", "decode_rank"))
     val byHash = Window.partitionBy(col("text_hash"))
     // FAILED decodes are exempt from the dedup window: every corrupt
@@ -2542,71 +2526,79 @@ object FundEtl {
     "etl_dedup_latest" -> etlDedupLatest,
     "etl_fee_model" -> etlFeeModel)
 
-  /** The oracle's classification CASE, biz CASE and label relation are
-    * all RENDERED from the same [[platformMatrix]] / [[bizRules]]
-    * literals that compile the Spark expressions — one source of
-    * truth, so a new platform row updates query and oracle together
-    * and the two engines cannot drift on rule semantics.
+  /** The oracle's classification CASE, routing CASE and label relation
+    * are all RENDERED from the same [[Walk]] values that compile the
+    * Spark expressions — one source of truth, so a new platform row
+    * updates query and oracle together and the two engines cannot drift
+    * on rule semantics.
     */
   private def scopedContentSql(lo: Int, hi: Int): String =
-    if (lo == 0 && hi < 0) "f.content"
+    if (lo == 0 && hi < 0) "content"
     else {
       // DuckDB list slices are 1-based inclusive; a slice starting past
       // the end is NULL, where Spark's substring suffix is '' — coalesce
       // so negated literals agree between the engines
       val hiS = if (hi >= 0) hi.toString else ""
-      s"coalesce(array_to_string(string_split(f.content, chr(10))[${lo + 1}:$hiS], chr(10)), '')"
+      s"coalesce(array_to_string(string_split(content, chr(10))[${lo + 1}:$hiS], chr(10)), '')"
     }
 
   private def litSql(l: SigLit): String = {
-    val base = if (l.src == 'f') "f.file_name" else scopedContentSql(l.lo, l.hi)
+    val base = if (l.src == 'f') "file_name" else scopedContentSql(l.lo, l.hi)
     val p = s"contains($base, '${l.pattern}')"
     if (l.neg) s"NOT $p" else p
   }
 
-  private def platformCaseSql: String =
-    platformMatrix.map { r =>
-      val cls = r.clauses
-        .map(_.map(litSql).mkString("(", " AND ", ")"))
-        .mkString("(", " OR ", ")")
-      s"WHEN $cls THEN '${r.platform}'"
-    }.mkString("CASE ", "\n         ", " END")
+  /** SQL twin of [[chain]]. */
+  private def caseSql(arms: Seq[(String, Seq[Seq[SigLit]])], default: String): String =
+    arms.map { case (v, cl) =>
+      val p = cl.map(_.map(litSql).mkString("(", " AND ", ")")).mkString("(", " OR ", ")")
+      s"WHEN $p THEN '$v'"
+    }.mkString("CASE ", "\n         ", s" ELSE $default END")
 
-  private def bizCaseSql: String =
-    bizRules.map { case (kw, alsoAny, biz) =>
-      val extra =
-        if (alsoAny.isEmpty) ""
-        else alsoAny.map(k => s"contains(file_name, '$k')")
-          .mkString(" AND (", " OR ", ")")
-      s"WHEN contains(file_name, '$kw')$extra THEN '$biz'"
-    }.mkString("CASE ", "\n         ", " ELSE 'OTH' END")
+  /** SQL twin of [[routeCol]]. */
+  private[graft] def routeSql(w: Walk): String = caseSql(w.routeArms, s"'${w.routeDefault}'")
 
-  private def redeemPlatformCaseSql: String =
-    redemptionMatrix.map { r =>
-      val cls = r.clauses
-        .map(_.map(litSql).mkString("(", " AND ", ")"))
-        .mkString("(", " OR ", ")")
-      s"WHEN $cls THEN '${r.platform}'"
-    }.mkString("CASE ", "\n         ", " END")
+  /** The walk's label rows as SQL VALUES tuples; "" renders NULL. */
+  private[graft] def rulesValuesSql(w: Walk): String =
+    w.labelRows.map(_.map {
+      case "" => "NULL"
+      case v: String => s"'$v'"
+      case v => v.toString
+    }.mkString("(", ", ", ")")).mkString(",\n    ")
 
-  private def redeemBizCaseSql: String =
-    redeemBizRules.map { case (kw, alsoAny, biz) =>
-      val extra =
-        if (alsoAny.isEmpty) ""
-        else alsoAny.map(k => s"contains(file_name, '$k')")
-          .mkString(" AND (", " OR ", ")")
-      s"WHEN contains(file_name, '$kw')$extra THEN '$biz'"
-    }.mkString("CASE ", "\n         ", " ELSE 'RED' END")
+  private def pairsValuesSql(pairs: Seq[(String, String)]): String =
+    pairs.map { case (a, b) => s"('$a', '$b')" }.mkString(", ")
 
-  private def redeemLabelsValuesSql: String = redemptionMatrix
-    .map { r =>
-      def opt(v: String) = if (v.isEmpty) "NULL" else s"'$v'"
-      s"('${r.platform}', '${r.nameLabel}', '${r.codeLabel}', " +
-        s"'${r.amountLabel}', '${r.sharesLabel}', '${r.feeLabel}', " +
-        s"${opt(r.dateLabel)}, '${r.dateMode}', ${r.dateFallback}, " +
-        s"${r.feeDefault}, ${opt(r.recMarker)}, ${opt(r.recValidity)}, " +
-        s"${opt(r.sectionMarker)})"
-    }.mkString(",\n    ")
+  /** A dated-folder text scan as a CTE: (file_name, batch_date,
+    * content) — `from` is read_text's argument, one quoted glob or a
+    * list of them. */
+  private def filesSql(from: String, name: String = "files"): String =
+    s"""$name AS (
+       |  SELECT regexp_extract(filename, '([^/]+)$$', 1) AS file_name,
+       |    regexp_extract(filename, '([0-9]{8})/[^/]+$$', 1) AS batch_date,
+       |    content
+       |  FROM read_text($from))""".stripMargin
+
+  /** The one oracle header every walk's oracle opens with: the rules
+    * relation, the dict, the files CTE (the walk's corpus, or the
+    * caller's `files(file_name, batch_date, content[, extra])` CTE for
+    * the OCR/PDF/XLSX/e2e front doors), the classification CASE and the
+    * label LEFT JOIN — the SQL twin of [[classify]].
+    */
+  private def walkCtes(w: Walk, filesCte: String = ""): String = {
+    val cols = w.labels.map(_._1)
+    s"""rules(platform, ${cols.mkString(", ")}) AS (
+       |  VALUES ${rulesValuesSql(w)}),
+       |dict(p_name, ${w.dictValue}) AS (VALUES ${pairsValuesSql(w.dict)}),
+       |${if (filesCte.nonEmpty) filesCte else filesSql(s"'${w.dir}/*/*.txt'")},
+       |classified AS (
+       |  SELECT f.*,
+       |    ${caseSql(w.platformArms, "NULL")} AS platform
+       |  FROM files f),
+       |labeled AS (
+       |  SELECT c.*, ${cols.map("r." + _).mkString(", ")}
+       |  FROM classified c LEFT JOIN rules r ON c.platform = r.platform)""".stripMargin
+  }
 
   /** SQL twin of [[redeemDateExpr]] — rendered once, applied to the
     * whole statement (ingest) or the record segment (multi). */
@@ -2621,34 +2613,8 @@ object FundEtl {
        |     END,
        |     CASE WHEN date_fb THEN batch_date END)""".stripMargin
 
-  /** Shared CTE chain for the redemption oracle family — rules
-    * relation, dict, file scan, compiled classification CASE and the
-    * label join, all rendered from [[redemptionMatrix]] /
-    * [[redeemBizRules]] (the ingestOracleCtes precedent: one source
-    * of truth, the engines cannot drift on rule semantics).
-    */
-  private def redeemOracleCtes: String =
-    s"""redeem_rules(platform, name_label, code_label, amount_label, shares_label, fee_label, date_label, date_mode, date_fb, fee_def, rec_marker, rec_validity, section_marker) AS (
-       |  VALUES $redeemLabelsValuesSql),
-       |dict(p_name, ledger_id) AS (VALUES $dictValuesSql),
-       |files AS (
-       |  SELECT regexp_extract(filename, '([^/]+)$$', 1) AS file_name,
-       |    regexp_extract(filename, '([0-9]{8})/[^/]+$$', 1) AS batch_date,
-       |    content
-       |  FROM read_text('$redemptionsDir/*/*.txt')),
-       |classified AS (
-       |  SELECT f.*,
-       |    $redeemPlatformCaseSql AS platform
-       |  FROM files f),
-       |labeled AS (
-       |  SELECT c.*, r.name_label, r.code_label, r.amount_label,
-       |    r.shares_label, r.fee_label, r.date_label, r.date_mode,
-       |    r.date_fb, r.fee_def, r.rec_marker, r.rec_validity,
-       |    r.section_marker
-       |  FROM classified c LEFT JOIN redeem_rules r ON c.platform = r.platform)""".stripMargin
-
   private def redeemIngestOracleSql: String =
-    s"""WITH $redeemOracleCtes,
+    s"""WITH ${walkCtes(redeemWalk)},
        |sectioned AS (
        |  SELECT l.*, CASE WHEN section_marker IS NULL THEN content
        |    WHEN strpos(content, section_marker) > 0
@@ -2657,7 +2623,7 @@ object FundEtl {
        |  FROM labeled l),
        |extracted AS (
        |  SELECT file_name, batch_date, platform,
-       |    $redeemBizCaseSql AS biz_type,
+       |    ${routeSql(redeemWalk)} AS biz_type,
        |    nullif(regexp_extract(xcontent, coalesce(code_label, '基金代码') || '：([0-9]{6})', 1), '') AS fund_code,
        |    nullif(regexp_extract(xcontent, coalesce(name_label, '产品名称') || '：(.+)', 1), '') AS product_name,
        |    CAST(replace(nullif(regexp_extract(xcontent, coalesce(amount_label, '确认金额') || '：([0-9,]+[.][0-9]+)', 1), ''), ',', '') AS DOUBLE) AS amount,
@@ -2679,7 +2645,7 @@ object FundEtl {
        |SELECT * FROM enriched ORDER BY file_name""".stripMargin
 
   private def redeemMultiOracleSql: String =
-    s"""WITH $redeemOracleCtes,
+    s"""WITH ${walkCtes(redeemWalk)},
        |recs AS (
        |  SELECT file_name, batch_date, platform,
        |    nullif(regexp_extract(content, name_label || '：(.+)', 1), '') AS product_name,
@@ -2712,7 +2678,7 @@ object FundEtl {
   private def redeemRowsOracleSql: String = {
     def pick(i: Int, j: Int) =
       s"CASE WHEN is_compact THEN regexp_extract(line, '$zdtCompactRe', $i) ELSE regexp_extract(line, '$zdtStandardRe', $j) END"
-    s"""WITH $redeemOracleCtes,
+    s"""WITH ${walkCtes(redeemWalk)},
        |zfiles AS (
        |  SELECT file_name, batch_date,
        |    nullif(regexp_extract(content, name_label || '：(.+)', 1), '') AS product_name,
@@ -2743,45 +2709,6 @@ object FundEtl {
        |ORDER BY file_name, row_no""".stripMargin
   }
 
-  private def divPlatformCaseSql: String =
-    dividendMatrix.map { r =>
-      val cls = r.clauses
-        .map(_.map(litSql).mkString("(", " AND ", ")"))
-        .mkString("(", " OR ", ")")
-      s"WHEN $cls THEN '${r.platform}'"
-    }.mkString("CASE ", "\n         ", " END")
-
-  private def divLabelsValuesSql: String = dividendMatrix
-    .map { r =>
-      def opt(v: String) = if (v.isEmpty) "NULL" else s"'$v'"
-      s"('${r.platform}', ${opt(r.nameLabel)}, ${opt(r.codeLabel)}, " +
-        s"${opt(r.amountLabel)}, ${opt(r.sharesLabel)}, '${r.amountMode}', " +
-        s"'${r.sharesMode}', ${opt(r.recMarker)}, ${opt(r.recValidity)}, " +
-        s"${r.endFromConfirm}, ${r.tokenMode})"
-    }.mkString(",\n    ")
-
-  /** Shared CTE chain for the dividend oracle family, rendered from
-    * [[dividendMatrix]] (one source of truth with the Spark side).
-    */
-  private def divOracleCtes: String =
-    s"""div_rules(platform, name_label, code_label, amount_label, shares_label, amount_mode, shares_mode, rec_marker, rec_validity, end_confirm, token_mode) AS (
-       |  VALUES $divLabelsValuesSql),
-       |dict(p_name, ledger_id) AS (VALUES $dictValuesSql),
-       |files AS (
-       |  SELECT regexp_extract(filename, '([^/]+)$$', 1) AS file_name,
-       |    regexp_extract(filename, '([0-9]{8})/[^/]+$$', 1) AS batch_date,
-       |    content
-       |  FROM read_text('$dividendsDir/*/*.txt')),
-       |classified AS (
-       |  SELECT f.*,
-       |    $divPlatformCaseSql AS platform
-       |  FROM files f),
-       |labeled AS (
-       |  SELECT c.*, r.name_label, r.code_label, r.amount_label,
-       |    r.shares_label, r.amount_mode, r.shares_mode, r.rec_marker,
-       |    r.rec_validity, r.end_confirm, r.token_mode
-       |  FROM classified c LEFT JOIN div_rules r ON c.platform = r.platform)""".stripMargin
-
   /** SQL twins of [[divValueExprs]] over the given source column —
     * rendered as two stacked CTE columns (shares first, coupled
     * amounts copy it).
@@ -2804,7 +2731,7 @@ object FundEtl {
     """nullif(regexp_extract(content, '(?:^|[\n ])([0-9]{6}) [^\n]*分红', 1), '')"""
 
   private def divIngestEnrichedCtes: String =
-    s"""$divOracleCtes,
+    s"""${walkCtes(divWalk)},
        |valued AS (
        |  SELECT l.*, ${divSharesRawSql("content")} AS shares_raw
        |  FROM labeled l),
@@ -2877,7 +2804,7 @@ object FundEtl {
        |    ELSE fund_code IS NOT NULL END)""".stripMargin
 
   private def divMultiOracleSql: String =
-    s"""WITH $divOracleCtes,
+    s"""WITH ${walkCtes(divWalk)},
        |$divMultiExCtes
        |SELECT * FROM mkept ORDER BY file_name, rec_no""".stripMargin
 
@@ -2930,7 +2857,7 @@ object FundEtl {
   }
 
   private def divRowsOracleSql: String =
-    s"""WITH $divOracleCtes,
+    s"""WITH ${walkCtes(divWalk)},
        |$divRowsCtes
        |SELECT * FROM zrows ORDER BY file_name, row_no""".stripMargin
 
@@ -2971,54 +2898,16 @@ object FundEtl {
        |FROM lvl1 GROUP BY ledger_id, fund_code
        |ORDER BY ledger_id, fund_code""".stripMargin
 
-  private def applyPlatformCaseSql: String =
-    applyMatrix.map { r =>
-      val cls = r.clauses
-        .map(_.map(litSql).mkString("(", " AND ", ")"))
-        .mkString("(", " OR ", ")")
-      s"WHEN $cls THEN '${r.platform}'"
-    }.mkString("CASE ", "\n         ", " END")
-
-  private def applyBizCaseSql: String =
-    applyBizRules.map { case (kw, _, biz) =>
-      s"WHEN contains(file_name, '$kw') THEN '$biz'"
-    }.mkString("CASE ", "\n         ", " ELSE 'SUB' END")
-
-  private def applyLabelsValuesSql: String = applyMatrix
-    .map { r =>
-      def opt(v: String) = if (v.isEmpty) "NULL" else s"'$v'"
-      s"('${r.platform}', '${r.nameLabel}', '${r.codeLabel}', " +
-        s"'${r.amountLabel}', '${r.amountMode}', ${opt(r.recMarker)})"
-    }.mkString(",\n    ")
-
-  private def applyOracleCtes: String =
-    s"""apply_rules(platform, name_label, code_label, amount_label, amount_mode, rec_marker) AS (
-       |  VALUES $applyLabelsValuesSql),
-       |dict(p_name, ledger_id) AS (VALUES $dictValuesSql),
-       |files AS (
-       |  SELECT regexp_extract(filename, '([^/]+)$$', 1) AS file_name,
-       |    regexp_extract(filename, '([0-9]{8})/[^/]+$$', 1) AS batch_date,
-       |    content
-       |  FROM read_text('$appliesDir/*/*.txt')),
-       |classified AS (
-       |  SELECT f.*,
-       |    $applyPlatformCaseSql AS platform
-       |  FROM files f),
-       |labeled AS (
-       |  SELECT c.*, r.name_label, r.code_label, r.amount_label,
-       |    r.amount_mode, r.rec_marker
-       |  FROM classified c LEFT JOIN apply_rules r ON c.platform = r.platform)""".stripMargin
-
   private def applyAmountSql(src: String): String =
     s"""CASE WHEN amount_mode = 'both'
        |      THEN coalesce(${divSameSql(src, "amount_label")}, ${divNextSql(src, "amount_label")})
        |      ELSE ${divSameSql(src, "amount_label")} END""".stripMargin
 
   private def applyIngestOracleSql: String =
-    s"""WITH $applyOracleCtes,
+    s"""WITH ${walkCtes(applyWalk)},
        |extracted AS (
        |  SELECT file_name, batch_date, platform,
-       |    $applyBizCaseSql AS biz_type,
+       |    ${routeSql(applyWalk)} AS biz_type,
        |    nullif(regexp_extract(content, coalesce(code_label, '基金代码') || '[：: ]*([0-9]{6})', 1), '') AS fund_code,
        |    nullif(regexp_extract(content, coalesce(name_label, '产品名称') || '[：: ]*(.+)', 1), '') AS product_name,
        |    CAST(replace(${applyAmountSql("content")}, ',', '') AS DOUBLE) AS apply_amount
@@ -3035,7 +2924,7 @@ object FundEtl {
        |SELECT * FROM enriched ORDER BY file_name""".stripMargin
 
   private def applyMultiOracleSql: String =
-    s"""WITH $applyOracleCtes,
+    s"""WITH ${walkCtes(applyWalk)},
        |recs AS (
        |  SELECT file_name, platform,
        |    nullif(regexp_extract(content, name_label || '[：: ]*(.+)', 1), '') AS product_name,
@@ -3054,7 +2943,7 @@ object FundEtl {
        |ORDER BY file_name, rec_no""".stripMargin
 
   private def applyRowsOracleSql: String =
-    s"""WITH $applyOracleCtes,
+    s"""WITH ${walkCtes(applyWalk)},
        |zfiles AS (
        |  SELECT file_name,
        |    nullif(regexp_extract(content, name_label || '[：: ]*(.+)', 1), '') AS product_name,
@@ -3088,14 +2977,6 @@ object FundEtl {
        |  SELECT * FROM anchor_rows WHERE apply_amount IS NOT NULL)
        |SELECT * FROM rows_all ORDER BY file_name, row_no""".stripMargin
 
-  private def convPlatformCaseSql: String =
-    convMatrix.map { r =>
-      val cls = r.clauses
-        .map(_.map(litSql).mkString("(", " AND ", ")"))
-        .mkString("(", " OR ", ")")
-      s"WHEN $cls THEN '${r.platform}'"
-    }.mkString("CASE ", "\n         ", " END")
-
   private def convIngestOracleSql: String = {
     def money(lbl: String) =
       s"CAST(replace(nullif(regexp_extract(content, '$lbl[：: ]*([0-9,]+[.][0-9]+)', 1), ''), ',', '') AS DOUBLE)"
@@ -3104,25 +2985,10 @@ object FundEtl {
       """CAST(replace(nullif(regexp_extract(content, '(?:^|\n)[^\n]*手续费[^\n]*?([0-9,]+[.][0-9]+)', 1), ''), ',', '') AS DOUBLE)"""
     val feeB =
       """CAST(replace(nullif(regexp_extract(content, '([0-9,]+[.][0-9]+) *[（(][^\n]*\n[^\n]*手续费', 1), ''), ',', '') AS DOUBLE)"""
-    s"""WITH conv_rules(platform, mode) AS (
-       |  VALUES ${convMatrix.map(r => s"('${r.platform}', '${r.mode}')").mkString(", ")}),
-       |cdict(p_name, conv_ledger) AS (
-       |  VALUES ${convLedger.map { case (n, l) => s"('$n', '$l')" }.mkString(", ")}),
-       |files AS (
-       |  SELECT regexp_extract(filename, '([^/]+)$$', 1) AS file_name,
-       |    regexp_extract(filename, '([0-9]{8})/[^/]+$$', 1) AS batch_date,
-       |    content
-       |  FROM read_text('$conversionsDir/*/*.txt')),
-       |classified AS (
-       |  SELECT f.*, $convPlatformCaseSql AS platform FROM files f),
-       |labeled AS (
-       |  SELECT c.*, r.mode
-       |  FROM classified c LEFT JOIN conv_rules r ON c.platform = r.platform),
+    s"""WITH ${walkCtes(convWalk)},
        |extracted AS (
        |  SELECT file_name, batch_date, platform,
-       |    CASE WHEN contains(file_name, 'chaoji') THEN 'CONV'
-       |         WHEN contains(file_name, 'zhuanhuan') THEN 'CONV'
-       |         ELSE 'EXCL_NOT_CONV' END AS biz_type,
+       |    ${routeSql(convWalk)} AS biz_type,
        |    CASE WHEN mode = 'pairnext' THEN
        |        nullif(coalesce(regexp_extract(content, '(?:^|\n)(万联[^\n]*)', 1), '')
        |          || coalesce(regexp_extract(content, '(?:^|\n)万联[^\n]*\n([^\n]*计划[^\n]*)', 1), ''), '')
@@ -3157,7 +3023,7 @@ object FundEtl {
        |  d.in_fund_code, d.in_amount, d.in_shares, d.conv_fee,
        |  d.batch_date AS out_confirm_date,
        |  (d.out_fund_code IS NOT NULL AND d.platform IS NOT NULL) AS valid
-       |FROM derived d LEFT JOIN cdict c ON d.product_name = c.p_name
+       |FROM derived d LEFT JOIN dict c ON d.product_name = c.p_name
        |ORDER BY d.file_name""".stripMargin
   }
 
@@ -3196,45 +3062,24 @@ object FundEtl {
         | LEFT JOIN nation ON c_nationkey = n_nationkey) t
         |ORDER BY rec_id""".stripMargin
 
-  private def labelsValuesSql: String = platformMatrix
-    .map(r => s"('${r.platform}', '${r.nameLabel}', '${r.codeLabel}', " +
-      s"'${r.amountLabel}', '${r.sharesLabel}', '${r.feeLabel}', '${r.dateLabel}', " +
-      (if (r.recMarker.isEmpty) "NULL" else s"'${r.recMarker}'") + ")")
-    .mkString(",\n    ")
-
-  private def dictValuesSql: String = productLedger
-    .map { case (n, l) => s"('$n', '$l')" }.mkString(", ")
-
   private def dictOpsSql: String = dictOps
     .map { case (q, a, n, nn, nc) => s"($q, '$a', '$n', '$nn', '$nc')" }
     .mkString(", ")
 
   /** One shared ingest-oracle body for the whole ingest family
-    * (etl_ingest_files / etl_ocr_route / etl_pdf_decode): the caller
-    * supplies the `files(file_name, batch_date, content[, extra])`
-    * CTE (plain read, OCR-routed, or container-decoded) and the tail —
-    * rules classification, field extraction, dict enrich — is one
-    * copy, so an extraction fix can't reach one oracle and miss the
-    * others.
+    * (etl_ingest_files / etl_ocr_route / etl_pdf_decode / ...): the
+    * caller may supply its own `files(file_name, batch_date,
+    * content[, extra])` CTE (OCR-routed, container-decoded, ...) and
+    * the tail — field extraction, dict enrich — is one copy, so an
+    * extraction fix can't reach one oracle and miss the others.
     */
-  private def ingestOracleCtes(filesCte: String, extra: Seq[String]): String = {
+  private def ingestOracleCtes(filesCte: String = "", extra: Seq[String] = Nil): String = {
     val extraPass = extra.map(", " + _).mkString
     val extraSel = extra.map(c => s", e.$c").mkString
-    s"""rules(platform, name_label, code_label, amount_label, shares_label, fee_label, date_label, rec_marker) AS (
-       |  VALUES $labelsValuesSql),
-       |dict(p_name, ledger_id) AS (VALUES $dictValuesSql),
-       |$filesCte,
-       |classified AS (
-       |  SELECT f.*,
-       |    $platformCaseSql AS platform
-       |  FROM files f),
-       |labeled AS (
-       |  SELECT c.*, r.name_label, r.code_label, r.amount_label,
-       |    r.shares_label, r.fee_label, r.date_label, r.rec_marker
-       |  FROM classified c LEFT JOIN rules r ON c.platform = r.platform),
+    s"""${walkCtes(confirmWalk, filesCte)},
        |extracted AS (
        |  SELECT file_name, batch_date, platform,
-       |    $bizCaseSql AS biz_type,
+       |    ${routeSql(confirmWalk)} AS biz_type,
        |    nullif(regexp_extract(content, coalesce(code_label, '基金代码') || '：([0-9]{6})', 1), '') AS fund_code,
        |    nullif(regexp_extract(content, coalesce(name_label, '产品名称') || '：(.+)', 1), '') AS product_name,
        |    CAST(replace(nullif(regexp_extract(content, coalesce(amount_label, '确认金额') || '：([0-9,]+[.][0-9]+)', 1), ''), ',', '') AS DOUBLE) AS amount,
@@ -3252,7 +3097,7 @@ object FundEtl {
        |  FROM extracted e LEFT JOIN dict d ON e.product_name = d.p_name)""".stripMargin
   }
 
-  private def ingestOracleSql(filesCte: String, extra: Seq[String] = Nil): String =
+  private def ingestOracleSql(filesCte: String = "", extra: Seq[String] = Nil): String =
     s"""WITH ${ingestOracleCtes(filesCte, extra)}
        |SELECT * FROM enriched ORDER BY file_name""".stripMargin
 
@@ -3270,6 +3115,9 @@ object FundEtl {
        |  FROM $from""".stripMargin
 
   /** SQL twin of [[containerDecoded]], shared the same way. */
+  private def textAndScanGlobs: String =
+    s"['$statementsDir/*/*.txt', '$statementsScanDir/*/*.txt']"
+
   private def containerDecodeSql(from: String): String =
     s"""SELECT file_name, batch_date,
        |    starts_with(content, '%GPDF-1.0') AS container_ok,
@@ -3283,7 +3131,7 @@ object FundEtl {
     // the same pre-batch validation + fold, re-derived over the same
     // VALUES literals (dict and ops render from one Scala Seq each)
     "etl_dict_maintain" ->
-      s"""WITH dict(name, code) AS (VALUES $dictValuesSql),
+      s"""WITH dict(name, code) AS (VALUES ${pairsValuesSql(productLedger)}),
         |ops(seq, action, name, new_name, new_code) AS (VALUES $dictOpsSql),
         |st AS (
         |  SELECT o.seq, o.action, o.name, o.new_name, o.new_code,
@@ -3355,22 +3203,12 @@ object FundEtl {
         |  FROM events) t
         |WHERE rn = 1 AND last_op <> 'D'
         |ORDER BY user_id""".stripMargin,
-    "etl_ingest_files" -> ingestOracleSql(
-      s"""files AS (
-         |  SELECT regexp_extract(filename, '([^/]+)$$', 1) AS file_name,
-         |    regexp_extract(filename, '([0-9]{8})/[^/]+$$', 1) AS batch_date,
-         |    content
-         |  FROM read_text('$statementsDir/*/*.txt'))""".stripMargin),
+    "etl_ingest_files" -> ingestOracleSql(),
     // multi-record extraction: same classified/labeled CTEs, then the
     // per-block explode + label extraction + record-validity rule —
     // rendered from the same matrix (rec_marker is a rule column)
     "etl_multi_record" ->
-      s"""WITH ${ingestOracleCtes(
-        s"""files AS (
-           |  SELECT regexp_extract(filename, '([^/]+)$$', 1) AS file_name,
-           |    regexp_extract(filename, '([0-9]{8})/[^/]+$$', 1) AS batch_date,
-           |    content
-           |  FROM read_text('$statementsDir/*/*.txt'))""".stripMargin, Nil)},
+      s"""WITH ${ingestOracleCtes()},
         |recs AS (
         |  SELECT file_name, platform,
         |    nullif(regexp_extract(content, coalesce(name_label, '产品名称') || '：(.+)', 1), '') AS product_name,
@@ -3403,12 +3241,7 @@ object FundEtl {
     "etl_apply_rows" -> applyRowsOracleSql,
     "etl_conv_ingest" -> convIngestOracleSql,
     "etl_ocr_route" -> ingestOracleSql(
-      s"""raw AS (
-         |  SELECT regexp_extract(filename, '([^/]+)$$', 1) AS file_name,
-         |    regexp_extract(filename, '([0-9]{8})/[^/]+$$', 1) AS batch_date,
-         |    content
-         |  FROM read_text(['$statementsDir/*/*.txt',
-         |                  '$statementsScanDir/*/*.txt'])),
+      s"""${filesSql(textAndScanGlobs, "raw")},
          |files AS (
          |  ${ocrRouteSql("raw")})""".stripMargin, extra = Seq("ocr_used")),
     "etl_ocr_fuzzy_extract" ->
@@ -3520,26 +3353,13 @@ object FundEtl {
          |  FROM read_parquet('$statementsRealDir/expected.parquet'))""".stripMargin,
       extra = Seq("pdf_ok", "content")),
     "etl_pdf_decode" -> ingestOracleSql(
-      s"""raw AS (
-         |  SELECT regexp_extract(filename, '([^/]+)$$', 1) AS file_name,
-         |    regexp_extract(filename, '([0-9]{8})/[^/]+$$', 1) AS batch_date,
-         |    content
-         |  FROM read_text('$statementsPdfDir/*/*.gpdf')),
+      s"""${filesSql(s"'$statementsPdfDir/*/*.gpdf'", "raw")},
          |files AS (
          |  ${containerDecodeSql("raw")})""".stripMargin, extra = Seq("container_ok")),
     "etl_e2e" ->
       s"""WITH ${ingestOracleCtes(
-        s"""raw_text AS (
-           |  SELECT regexp_extract(filename, '([^/]+)$$', 1) AS file_name,
-           |    regexp_extract(filename, '([0-9]{8})/[^/]+$$', 1) AS batch_date,
-           |    content
-           |  FROM read_text(['$statementsDir/*/*.txt',
-           |                  '$statementsScanDir/*/*.txt'])),
-           |raw_pdf AS (
-           |  SELECT regexp_extract(filename, '([^/]+)$$', 1) AS file_name,
-           |    regexp_extract(filename, '([0-9]{8})/[^/]+$$', 1) AS batch_date,
-           |    content
-           |  FROM read_text('$statementsPdfDir/*/*.gpdf')),
+        s"""${filesSql(textAndScanGlobs, "raw_text")},
+           |${filesSql(s"'$statementsPdfDir/*/*.gpdf'", "raw_pdf")},
            |files AS (
            |  SELECT file_name, batch_date, content, decode_rank
            |  FROM (${ocrRouteSql("raw_text")})

@@ -252,7 +252,7 @@ object EventStreams extends Serializable {
     * are picked up per micro-batch, classified by the SAME compiled
     * 23-platform matrix as the batch operator (a map-only when-chain
     * plus a stream-static broadcast label join — both stateless, so
-    * FundEtl.classifyStatements runs unchanged in append mode), and
+    * FundEtl.classify runs unchanged in append mode), and
     * run through the same map-only extraction tail
     * (FundEtl.extractStatementFields; ONE implementation for both
     * modes). Sink it with upsertToPartitionedParquet keyed on
@@ -267,7 +267,7 @@ object EventStreams extends Serializable {
           .load(dir))
       .withColumn("content", col("content").cast("string"))
     graft.operators.FundEtl.extractStatementFields(spark,
-      graft.operators.FundEtl.classifyStatements(spark, files))
+      graft.operators.FundEtl.classify(spark, graft.operators.FundEtl.confirmWalk, files))
   }
 
   /** Partition-pruned foreachBatch upsert: the snapshot is laid out in
@@ -840,7 +840,7 @@ object EventStreams extends Serializable {
     // AQE over an InMemoryTableScan of the extract chain. Batch-bounded,
     // ContextCleaner-freed when the batch-local reference drops.
     val extracted = graft.operators.FundEtl.extractStatementFields(spark,
-        graft.operators.FundEtl.classifyStatements(spark, batch),
+        graft.operators.FundEtl.classify(spark, graft.operators.FundEtl.confirmWalk, batch),
         extra = Seq("content"))
       .withColumn("doc_id", xxhash64(col("file_name")))
       .localCheckpoint()

@@ -154,6 +154,39 @@ class PlatformMatrixSpec extends SparkTestBase {
       s"unexpected multi-record files: ${recs.keys}")
   }
 
+  test("each walk's rendered rules and routing CASE equal what Spark compiles") {
+    import operators.FundEtl._
+    import spark.implicits._
+    for (w <- Seq(confirmWalk, redeemWalk, divWalk, applyWalk, convWalk)) {
+      val name = w.dir.split('/').last
+      // the oracle's VALUES rows, read back by Spark, are the relation
+      // classify joins
+      val cols = ("platform" +: w.labels.map(_._1)).mkString(", ")
+      val rendered = spark.sql(s"SELECT * FROM VALUES ${rulesValuesSql(w)} AS t($cols)")
+      val joined = labelFrame(spark, w)
+      assert(rendered.schema.map(f => (f.name, f.dataType)) ==
+        joined.schema.map(f => (f.name, f.dataType)), s"$name: schema")
+      assert(rendered.collect().toSeq == joined.collect().toSeq, s"$name: rows")
+      // the oracle's routing CASE, evaluated by Spark, is the compiled
+      // chain — on the corpus names plus one name per keep-only-if row
+      // that only its last extra keyword keeps
+      if (w.route.nonEmpty) {
+        val keepIf = w.route.collect {
+          case (kw, any, cls) if any.nonEmpty => (s"${any.last}_${kw}_synthetic.txt", cls)
+        }
+        val names = loadStatements(spark, w.dir).select(col("file_name"))
+          .union(keepIf.map(_._1).toDF("file_name"))
+        val routed = names.select(col("file_name"), routeCol(w), expr(routeSql(w)))
+          .collect().map(r => r.getString(0) -> (r.getString(1), r.getString(2))).toMap
+        assert(routed.size > keepIf.size, s"$name: empty corpus")
+        routed.foreach { case (f, (compiled, sql)) =>
+          assert(compiled == sql, s"$f: compiled $compiled, rendered $sql")
+        }
+        keepIf.foreach { case (f, cls) => assert(routed(f)._1 == cls, s"$f must route $cls") }
+      }
+    }
+  }
+
   test("classification is one map-only when-chain + broadcast label join: no window shuffle") {
     val plan = operators.FundEtl.etlIngestFiles(spark, sfDir)
       .queryExecution.executedPlan.toString
