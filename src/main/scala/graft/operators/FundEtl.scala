@@ -638,6 +638,10 @@ object FundEtl {
     */
   private[graft] val statementsDir = "/root/repo/data/statements"
 
+  /** A corpus folder beside [[statementsDir]], under the same data root. */
+  private def corpusDir(name: String): String =
+    new java.io.File(statementsDir).getParent + "/" + name
+
   /** One statement walk as data — everything [[classify]] compiles for
     * Spark and [[walkCtes]] renders for the oracle, so both engines
     * read the same rows:
@@ -685,7 +689,7 @@ object FundEtl {
       ("date_fb", _.dateFallback), ("fee_def", _.feeDefault),
       ("rec_marker", _.recMarker), ("rec_validity", _.recValidity),
       ("section_marker", _.sectionMarker)),
-    redeemBizRules, "RED", "/root/repo/data/redemptions")
+    redeemBizRules, "RED", corpusDir("redemptions"))
 
   private[graft] val divWalk = Walk(dividendMatrix,
     labelCols(dividendMatrix)(("name_label", _.nameLabel),
@@ -694,17 +698,17 @@ object FundEtl {
       ("shares_mode", _.sharesMode), ("rec_marker", _.recMarker),
       ("rec_validity", _.recValidity), ("end_confirm", _.endFromConfirm),
       ("token_mode", _.tokenMode)),
-    Nil, "", "/root/repo/data/dividends")
+    Nil, "", corpusDir("dividends"))
 
   private[graft] val applyWalk = Walk(applyMatrix,
     labelCols(applyMatrix)(("name_label", _.nameLabel),
       ("code_label", _.codeLabel), ("amount_label", _.amountLabel),
       ("amount_mode", _.amountMode), ("rec_marker", _.recMarker)),
-    applyBizRules, "SUB", "/root/repo/data/applies")
+    applyBizRules, "SUB", corpusDir("applies"))
 
   private[graft] val convWalk = Walk(convMatrix,
     labelCols(convMatrix)(("mode", _.mode)),
-    convBizRules, "EXCL_NOT_CONV", "/root/repo/data/conversions",
+    convBizRules, "EXCL_NOT_CONV", corpusDir("conversions"),
     convLedger, "conv_ledger")
 
   /** Signature-based document classification — the reference routes
