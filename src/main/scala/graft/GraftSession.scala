@@ -35,6 +35,19 @@ object GraftSession {
       // instead of starving the aggregation pool. Default untouched.
       .config("spark.memory.storageFraction",
         sys.env.getOrElse("SPARK_GRAFT_STORAGE_FRACTION", "0.5"))
+      // Folder listing stays on the driver. Past this many paths Spark
+      // lists with a job of one task per path, and on one
+      // BinaryFiles.scan (local[4], p50 of 7 runs) that job never won:
+      // 40 folders 156–296 ms against 10–20 ms on the driver, 400
+      // folders 1,083–1,465 ms against 29–55 ms, 4,000 folders
+      // 8,540–10,623 ms against 205–250 ms. A streaming micro-batch
+      // hands its files over as leaf paths, so past the default of 32
+      // files it paid the same job (48 files: a 48-task stage, 524 ms
+      // against 240 ms). Pass folders, not leaf files: a leaf glob such
+      // as `dir/*/*.txt` makes one path per file (1,508 files ran a
+      // 1,508-task listing job of 4.2–4.5 s), and past this threshold
+      // that is again one task per file.
+      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "10000")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.adaptive.enabled", "true")

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.operators.{Dedup, FundEtl, Multimodal, Relational, Similarity, StreamingTwins, TextAnalysis}
 
-/** Driver contract — see /root/repo/SURVEY.md §2 for the operator
+/** Driver contract — see SURVEY.md §2 for the operator
   * inventory and §6 for the determinism conventions shared by every
   * (query, oracle) pair.
   */

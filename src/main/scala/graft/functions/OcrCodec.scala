@@ -51,7 +51,7 @@ object OcrCodec {
 
   private val Cell = 16
   private val RejectBits = 64
-  val defaultFontDir = "/root/repo/data/statements_ocr/font"
+  val defaultFontDir = s"${graft.sources.BinaryFiles.dataRoot}/statements_ocr/font"
 
   /** One template = the glyph's 256-bit cell signature as 4 longs. */
   private final class Font(

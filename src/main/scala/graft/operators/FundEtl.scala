@@ -636,11 +636,10 @@ object FundEtl {
     * layout the reference walks with os.walk
     * (`purchase_confirm_extractor.py:1417-1439`).
     */
-  private[graft] val statementsDir = "/root/repo/data/statements"
+  private[graft] val statementsDir = corpusDir("statements")
 
-  /** A corpus folder beside [[statementsDir]], under the same data root. */
-  private def corpusDir(name: String): String =
-    new java.io.File(statementsDir).getParent + "/" + name
+  /** A folder of the committed corpus, under [[graft.sources.BinaryFiles.dataRoot]]. */
+  private def corpusDir(name: String): String = s"${graft.sources.BinaryFiles.dataRoot}/$name"
 
   /** One statement walk as data — everything [[classify]] compiles for
     * Spark and [[walkCtes]] renders for the oracle, so both engines
@@ -1394,8 +1393,8 @@ object FundEtl {
         ++ extra.map(col): _*)
   }
 
-  private[graft] val statementsScanDir = "/root/repo/data/statements_scan"
-  private[graft] val statementsPdfDir = "/root/repo/data/statements_pdf"
+  private[graft] val statementsScanDir = corpusDir("statements_scan")
+  private[graft] val statementsPdfDir = corpusDir("statements_pdf")
 
   /** OCR-FALLBACK ROUTING — the reference routes scanned PDFs through
     * EasyOCR when text extraction yields nothing
@@ -1467,7 +1466,7 @@ object FundEtl {
       .orderBy(col("file_name"))
   }
 
-  private[graft] val statementsRealDir = "/root/repo/data/statements_real"
+  private[graft] val statementsRealDir = corpusDir("statements_real")
 
   /** REAL PDF ingest — etl_pdf_decode's stub codec replaced with the
     * actual format (`conversion_extractor.py:253` pdfplumber.open):
@@ -1497,7 +1496,7 @@ object FundEtl {
       .orderBy(col("file_name"))
   }
 
-  private[graft] val statementsXlsxDir = "/root/repo/data/statements_xlsx"
+  private[graft] val statementsXlsxDir = corpusDir("statements_xlsx")
 
   /** XLSX statement ingest — the reference's Excel surface
     * (`dividend_extractor.py:1451` `pd.ExcelWriter`, and the workbook
@@ -1728,34 +1727,6 @@ object FundEtl {
       .orderBy(col("file_name"), col("row_no"))
   }
 
-  /** Same-line / next-line dividend value extraction over `src` with
-    * the label held in column `lblCol` — the separators are the
-    * reference's `[：: ]*` family. */
-  private def divSameExpr(src: String, lblCol: String): String =
-    s"nullif(regexp_extract($src, concat($lblCol, '[：: ]*([0-9,]+[.][0-9]+)'), 1), '')"
-  private def divNextExpr(src: String, lblCol: String): String =
-    s"nullif(regexp_extract($src, concat($lblCol, '[^\\n]*\\n *([0-9,]+[.][0-9]+)'), 1), '')"
-
-  /** The per-mode raw shares/amount pair as one SQL CASE pair; the
-    * value-coupled platforms (amount_label NULL) copy shares into
-    * amount exactly like the reference's `dividend_amount = value`
-    * assignments.
-    */
-  private def divValueExprs(src: String): (String, String) = {
-    val tokenValue =
-      s"nullif(regexp_extract($src, '分红 +(?:[^ ]+ +){5}([0-9,]+[.]?[0-9]*)', 1), '')"
-    val sharesRaw =
-      s"""CASE WHEN token_mode THEN $tokenValue
-         |  WHEN shares_mode = 'next' THEN ${divNextExpr(src, "shares_label")}
-         |  WHEN shares_mode = 'both' THEN coalesce(${divSameExpr(src, "shares_label")}, ${divNextExpr(src, "shares_label")})
-         |  ELSE ${divSameExpr(src, "shares_label")} END""".stripMargin
-    val amountRaw =
-      s"""CASE WHEN token_mode OR amount_label IS NULL THEN shares_raw
-         |  WHEN amount_mode = 'next' THEN ${divNextExpr(src, "amount_label")}
-         |  ELSE ${divSameExpr(src, "amount_label")} END""".stripMargin
-    (sharesRaw, amountRaw)
-  }
-
   /** DIVIDEND-STATEMENT ingest — the reference's third front door
     * (`dividend_extractor.py:1264-1443`) re-expressed on the compiled
     * chain: classify by the dividend signature set, extract the
@@ -1773,12 +1744,11 @@ object FundEtl {
 
   private[graft] def divIngestFrame(s: SparkSession,
       classified: Option[DataFrame] = None): DataFrame = {
-    val (sharesRaw, amountRaw) = divValueExprs("content")
     val tokenCode =
       "nullif(regexp_extract(content, '(?:^|[\\n ])([0-9]{6}) [^\\n]*分红', 1), '')"
     classified.getOrElse(classify(s, divWalk))
-      .withColumn("shares_raw", expr(sharesRaw))
-      .withColumn("amount_raw", expr(amountRaw))
+      .withColumn("shares_raw", expr(divSharesRawSql("content")))
+      .withColumn("amount_raw", expr(divAmountRawSql("content")))
       .withColumn("fund_code", expr(
         s"""CASE WHEN token_mode THEN $tokenCode
            | ELSE nullif(regexp_extract(content, concat(coalesce(code_label, '基金代码'), '[：: ]*([0-9]{6})'), 1), '') END""".stripMargin))
@@ -1813,7 +1783,6 @@ object FundEtl {
 
   private def divMultiFrame(s: SparkSession,
       classified: Option[DataFrame] = None): DataFrame = {
-    val (sharesRaw, amountRaw) = divValueExprs("seg")
     classified.getOrElse(classify(s, divWalk))
       .filter(col("rec_marker").isNotNull)
       .withColumn("product_name", expr(
@@ -1824,8 +1793,8 @@ object FundEtl {
         col("rec_validity"),
         posexplode(expr("split(content, rec_marker)")).as(Seq("rec_no", "seg")))
       .filter(col("rec_no") >= 1)
-      .withColumn("shares_raw", expr(sharesRaw))
-      .withColumn("amount_raw", expr(amountRaw))
+      .withColumn("shares_raw", expr(divSharesRawSql("seg")))
+      .withColumn("amount_raw", expr(divAmountRawSql("seg")))
       .withColumn("fund_code", expr(
         "nullif(regexp_extract(seg, concat(code_label, '[：: ]*([0-9]{6})'), 1), '')"))
       .withColumn("div_amount", expr("cast(replace(amount_raw, ',', '') as double)"))
@@ -1965,11 +1934,6 @@ object FundEtl {
       .orderBy(col("ledger_id"), col("fund_code"))
   }
 
-  private def applyAmountExpr(src: String): String =
-    s"""CASE WHEN amount_mode = 'both'
-       |  THEN coalesce(${divSameSql(src, "amount_label")}, ${divNextSql(src, "amount_label")})
-       |  ELSE ${divSameSql(src, "amount_label")} END""".stripMargin
-
   /** PURCHASE-APPLY ingest — the reference's fourth front door
     * (`purchase_extractor.py:947-1110`): walk-level filename
     * exclusions (赎回/超级/转换/分红方式/分红设置/失效 → EXCL_*,
@@ -1987,7 +1951,7 @@ object FundEtl {
       .withColumn("product_name", expr(
         "nullif(regexp_extract(content, concat(coalesce(name_label, '产品名称'), '[：: ]*(.+)'), 1), '')"))
       .withColumn("apply_amount",
-        expr(s"cast(replace(${applyAmountExpr("content")}, ',', '') as double)"))
+        expr(s"cast(replace(${applyAmountSql("content")}, ',', '') as double)"))
       .join(broadcast(dictFrame(s, applyWalk)), col("product_name") === col("p_name"), "left")
       .select(col("file_name"), col("batch_date"),
         coalesce(col("platform"), lit("UNKNOWN")).as("platform"),
@@ -2016,7 +1980,7 @@ object FundEtl {
       .withColumn("fund_code", expr(
         "nullif(regexp_extract(seg, concat(code_label, '[：: ]*([0-9]{6})'), 1), '')"))
       .withColumn("apply_amount",
-        expr(s"cast(replace(${applyAmountExpr("seg")}, ',', '') as double)"))
+        expr(s"cast(replace(${applyAmountSql("seg")}, ',', '') as double)"))
       .filter(col("fund_code").isNotNull && col("apply_amount").isNotNull)
       .select(col("file_name"), col("platform"),
         col("rec_no").cast("long").as("rec_no"), col("product_name"),
@@ -2127,7 +2091,7 @@ object FundEtl {
       .orderBy(col("file_name"))
   }
 
-  private[graft] val statementsOcrDir = "/root/repo/data/statements_ocr"
+  private[graft] val statementsOcrDir = corpusDir("statements_ocr")
 
   /** REAL OCR ingest — etl_ocr_route's stub unhex replaced with actual
     * text RECOGNITION over scanned statement images
@@ -2451,7 +2415,7 @@ object FundEtl {
     graft.sources.Avro.navIngest(s, graft.sources.Avro.avroDir)
       .orderBy(col("file_name"))
 
-  private[graft] val statementsFwDir = "/root/repo/data/statements_fw"
+  private[graft] val statementsFwDir = corpusDir("statements_fw")
 
   /** Fixed-width statement-export ingest — the mainframe/bank-batch
     * interchange format next to the CSV/JSON/XLSX/PDF/scan legs: no
@@ -2713,9 +2677,14 @@ object FundEtl {
        |ORDER BY file_name, row_no""".stripMargin
   }
 
-  /** SQL twins of [[divValueExprs]] over the given source column —
-    * rendered as two stacked CTE columns (shares first, coupled
-    * amounts copy it).
+  /** Same-line / next-line dividend value extraction over `src` with
+    * the label held in column `lbl` — the separators are the
+    * reference's `[：: ]*` family — and the per-mode raw shares/amount
+    * pair built from them: the value-coupled platforms (amount_label
+    * NULL) copy shares into amount exactly like the reference's
+    * `dividend_amount = value` assignments. One text for both engines:
+    * Spark reads it with `expr`, the oracle renders it as two stacked
+    * CTE columns (shares first, coupled amounts copy it).
     */
   private def divSameSql(src: String, lbl: String): String =
     s"nullif(regexp_extract($src, $lbl || '[：: ]*([0-9,]+[.][0-9]+)', 1), '')"
@@ -2902,6 +2871,7 @@ object FundEtl {
        |FROM lvl1 GROUP BY ledger_id, fund_code
        |ORDER BY ledger_id, fund_code""".stripMargin
 
+  /** The apply amount over `src`; Spark reads the same text with `expr`. */
   private def applyAmountSql(src: String): String =
     s"""CASE WHEN amount_mode = 'both'
        |      THEN coalesce(${divSameSql(src, "amount_label")}, ${divNextSql(src, "amount_label")})

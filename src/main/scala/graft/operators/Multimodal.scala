@@ -349,7 +349,7 @@ object Multimodal {
       .orderBy(col("doc_id"))
   }
 
-  private[graft] val imagesDir = "/root/repo/data/images"
+  private[graft] val imagesDir = s"${graft.sources.BinaryFiles.dataRoot}/images"
 
   /** REAL image decode over a committed corpus of true PNG files —
     * the full-stats sibling of mmDecodeMeta, closing the image
@@ -531,7 +531,7 @@ object Multimodal {
       .orderBy(col("cluster_key"), col("file_name"))
   }
 
-  private[graft] val audioDir = "/root/repo/data/audio"
+  private[graft] val audioDir = s"${graft.sources.BinaryFiles.dataRoot}/audio"
 
   /** REAL audio decode over a committed corpus of true WAV files —
     * the audio sibling of [[mmImageDecode]], same contract:

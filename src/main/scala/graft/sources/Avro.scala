@@ -21,7 +21,7 @@ import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWri
   */
 object Avro {
 
-  private[graft] val avroDir = "/root/repo/data/avro"
+  private[graft] val avroDir = s"${BinaryFiles.dataRoot}/avro"
 
   val navSchemaJson: String =
     """{"type":"record","name":"FundNav","fields":[

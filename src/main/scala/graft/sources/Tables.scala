@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Readers for the harness tables.
   *
-  * One parquet file per table under the scale-factor dir. Readers are
+  * Each table is `<name>.parquet` under the scale-factor dir: a single
+  * file, or a directory of part files (perfbench writes 4). Readers are
   * plain `spark.read.parquet` so Catalyst keeps full pushdown/pruning
   * freedom — no eager caching, no schema forcing (the files carry
   * their schema).

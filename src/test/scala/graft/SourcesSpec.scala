@@ -1,11 +1,91 @@
 package graft
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
-import graft.sources.Tables
+import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.streaming.Trigger
+import graft.sources.{BinaryFiles, Tables}
 
-/** CSV/JSON source round-trips and the SQL extension functions. */
+/** Source round-trips, the binaryFile front door's listing and split
+  * sizing, and the SQL extension functions.
+  */
 class SourcesSpec extends SparkTestBase {
+
+  /** The jobs and stages `body` runs, once the listener bus has drained. */
+  private def logged(body: => Unit): JobLog = {
+    val sc = spark.sparkContext
+    val log = new JobLog
+    sc.addSparkListener(log)
+    try body
+    finally { Bridge.waitUntilEmpty(sc); sc.removeSparkListener(log) }
+    log
+  }
+
+  /** 40 dated folders × 10 tiny statement files: more folders than
+    * Spark's default listing threshold (32), and far more files than
+    * one split's 4 MB open cost per file lets a split hold.
+    */
+  private lazy val statementTree: (String, Seq[String]) = {
+    val root = Files.createTempDirectory("graft_tree")
+    val names = for (d <- 1 to 40; i <- 0 until 10) yield {
+      val day = Files.createDirectories(root.resolve(f"202501$d%02d"))
+      val name = f"s_$d%02d_$i.txt"
+      Files.writeString(day.resolve(name), s"statement $d $i\n")
+      name
+    }
+    (root.toString, names)
+  }
+
+  test("BinaryFiles.scan over 40 dated folders builds with no Spark job") {
+    val sc = spark.sparkContext
+    val log = logged {
+      sc.setJobGroup("binary-files-scan", "scan build")
+      try BinaryFiles.scan(spark, "*.txt", statementTree._1)
+      finally sc.clearJobGroup()
+    }
+    val jobs = log.jobs.values.asScala.filter(_.group == "binary-files-scan")
+    assert(jobs.isEmpty, jobs)
+  }
+
+  test("BinaryFiles.scan packs 400 tiny files into at most one partition per core") {
+    val df = BinaryFiles.scan(spark, "*.txt", statementTree._1)
+    assert(df.rdd.getNumPartitions <= spark.sparkContext.defaultParallelism,
+      df.rdd.getNumPartitions)
+    assert(df.count() == 400)
+  }
+
+  test("FundEtl.ingestFrom over the tree: one row per file, in file_name order") {
+    val (root, names) = statementTree
+    val got = operators.FundEtl.ingestFrom(spark, root).select("file_name")
+      .collect().map(_.getString(0)).toSeq
+    assert(got == names.sorted)
+  }
+
+  test("a binaryFile stream micro-batch of 48 files runs no 48-task stage") {
+    val in = Files.createTempDirectory("graft_stream48")
+    val day = Files.createDirectories(in.resolve("20250101"))
+    (0 until 48).foreach(i => Files.writeString(day.resolve(f"s$i%02d.txt"), s"statement $i\n"))
+    var runId = ""
+    var rows = 0L
+    val log = logged {
+      val q = BinaryFiles.projectPaths(spark.readStream.format("binaryFile")
+          .option("pathGlobFilter", "*.txt")
+          .option("recursiveFileLookup", "true")
+          .schema("path STRING, modificationTime TIMESTAMP, length LONG, content BINARY")
+          .load(in.toString))
+        .writeStream.format("noop")
+        .option("checkpointLocation", Files.createTempDirectory("graft_stream48_ck").toString)
+        .trigger(Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
+      runId = q.runId.toString
+      rows = q.recentProgress.map(_.numInputRows).sum
+    }
+    assert(rows == 48)
+    val tasks = log.stages.values.asScala.collect { case (g, n) if g == runId => n }.toSeq
+    assert(tasks.nonEmpty && !tasks.contains(48), tasks)
+  }
 
   test("csv round-trip with explicit schema") {
     val dir = Files.createTempDirectory("graft_csv").toString

@@ -3,23 +3,31 @@ package graft
 import java.util.concurrent.{ConcurrentHashMap, CyclicBarrier}
 import scala.jdk.CollectionConverters._
 import org.apache.spark.TaskContext
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageSubmitted}
 
 /** Every job the context starts while installed: start and end times
-  * (the scheduler's clock, epoch ms), tags, group and description.
+  * (the scheduler's clock, epoch ms), tags, group and description; and
+  * every stage it submits: job group and task count.
   */
 final class JobLog extends SparkListener {
   final case class Job(start: Long, tags: Set[String], group: String, desc: String)
   val jobs = new ConcurrentHashMap[Int, Job]()
   val ends = new ConcurrentHashMap[Int, Long]()
+  val stages = new ConcurrentHashMap[Int, (String, Int)]()
+
+  private def prop(p: java.util.Properties, k: String): String =
+    Option(p).flatMap(q => Option(q.getProperty(k))).getOrElse("")
 
   override def onJobStart(e: SparkListenerJobStart): Unit = {
-    val p = e.properties
-    def prop(k: String) = Option(p).flatMap(q => Option(q.getProperty(k))).getOrElse("")
-    jobs.put(e.jobId, Job(e.time, prop("spark.job.tags").split(",").filter(_.nonEmpty).toSet,
-      prop("spark.jobGroup.id"), prop("spark.job.description")))
+    def get(k: String) = prop(e.properties, k)
+    jobs.put(e.jobId, Job(e.time, get("spark.job.tags").split(",").filter(_.nonEmpty).toSet,
+      get("spark.jobGroup.id"), get("spark.job.description")))
   }
   override def onJobEnd(e: SparkListenerJobEnd): Unit = { ends.put(e.jobId, e.time); () }
+  override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = {
+    stages.put(e.stageInfo.stageId,
+      (prop(e.properties, "spark.jobGroup.id"), e.stageInfo.numTasks)); ()
+  }
 
   /** Jobs started at or after `since` that carry a [[Stages]] tag. */
   def staged(since: Long): Map[Int, Job] = jobs.asScala.toMap.filter { case (_, j) =>
